@@ -5,10 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.IterState
 
 /** Process-wide memo of MATERIALIZED derived tables ("index
-  * artifacts"), keyed by (kind, corpus dir, data fingerprint) — the
-  * generalization of the kNN-index memo (`Similarity.knnGraphShared`)
-  * to every derived table that is built once per corpus version and
-  * consumed by several independent queries: LSH band tables, minhash
+  * artifacts"), keyed by (kind, corpus dir, data fingerprint): every
+  * derived table that is built once per corpus version and consumed
+  * by several independent queries — the kNN index
+  * (`Similarity.knnGraphShared`), LSH band tables, minhash
   * signatures, shingle-set arrays, the dedup cluster decision.
   *
   * This is the production posture, not a bench trick: a near-dup
@@ -23,10 +23,8 @@ import graft.ops.IterState
   *
   * The fingerprint (name:length:mtime of every file in the corpus
   * dir) keys out in-place data regeneration; a new corpus version in
-  * a new dir is a new key by construction. `graft.artifactReuse=false`
-  * opts out: every call then builds (and still materializes — the
-  * derivation plans assume a materialized input) its own copy.
-  * Files are swept at JVM exit via the `IterState` registry. */
+  * a new dir is a new key by construction. Files are swept at JVM
+  * exit via the `IterState` registry. */
 object ArtifactCache {
 
   // plain map + reentrant lock, NOT ConcurrentHashMap.computeIfAbsent:
@@ -45,11 +43,11 @@ object ArtifactCache {
   }
 
   // Ledger of every artifact build this process ran: (kind, seconds).
-  // The bench's min-of-3 per-query timing legitimately amortizes these
-  // once-per-corpus-version builds away (they are the release
-  // pipeline's cost, not the query's), but the amortized cost must
-  // stay VISIBLE — graft.Bench prints one summary line from this
-  // ledger so every BENCH capture carries what the min excluded.
+  // A warm query loop legitimately amortizes these once-per-corpus-
+  // version builds away (they are the release pipeline's cost, not
+  // the query's), but the amortized cost must stay VISIBLE — the
+  // perfbench harness reads `buildLog` before and after each op and
+  // reports the deltas as its ArtifactCache build metrics.
   //
   // Each entry is the build's SELF time: elapsed minus the elapsed of
   // any builds nested inside it. Artifact builders call back into the
@@ -60,11 +58,6 @@ object ArtifactCache {
   // wall-clock spent building, and each kind carries exactly the cost
   // a pre-built child would have removed.
   private val builds = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-
-  /** Record a non-ArtifactCache index build (kNN memo, bucketed
-    * layouts) in the same ledger. */
-  def recordBuild(kind: String, sec: Double): Unit =
-    builds.synchronized { builds += ((kind, sec)); () }
 
   // Per-thread stack of child-elapsed accumulators backing the
   // self-time rule. Builds are thread-local by construction: the memo
@@ -77,13 +70,14 @@ object ArtifactCache {
   /** Run `f` as the named index build: record its SELF time (elapsed
     * minus nested timed builds) in the ledger, and charge its full
     * elapsed to the enclosing build, if any. */
-  def timedBuild[A](kind: String)(f: => A): A = {
+  private def timedBuild[A](kind: String)(f: => A): A = {
     val stack = nested.get()
     stack.push(Array(0.0))
     val t0 = System.nanoTime()
     try {
       val a = f
-      recordBuild(kind, (System.nanoTime() - t0) / 1e9 - stack.peek()(0))
+      val self = (System.nanoTime() - t0) / 1e9 - stack.peek()(0)
+      builds.synchronized { builds += ((kind, self)) }
       a
     } finally {
       stack.pop()
@@ -139,16 +133,14 @@ object ArtifactCache {
     * artifact parquet has fully consumed the plan. */
   def tableReleasable(spark: SparkSession, kind: String, dir: String)
       (build: => (DataFrame, () => Unit)): DataFrame = {
-    val reuse = spark.conf.getOption("graft.artifactReuse").forall(_.toBoolean)
-    def run(): String = timedBuild(kind) {
-      val (df, release) = build
-      val p = this.build(spark, kind, df)
-      release()
-      p
+    val path = memo(s"$kind|$dir|${dirFingerprint(spark, dir)}") {
+      timedBuild(kind) {
+        val (df, release) = build
+        val p = this.build(spark, kind, df)
+        release()
+        p
+      }
     }
-    val path =
-      if (reuse) memo(s"$kind|$dir|${dirFingerprint(spark, dir)}")(run())
-      else run()
     spark.read.parquet(path)
   }
 }

@@ -17,9 +17,9 @@ package graft
   * know when its caches become releasable. Release belongs to the
   * RUNNER:
   *
-  *   - `Bench` clears the cache between reps, `Verify` between
-  *     queries, and the test base (`SparkSpec.afterEach`) between
-  *     tests — `spark.catalog.clearCache()` in all three.
+  *   - `Verify` clears the cache between queries, the perfbench
+  *     harness between ops, and the test base (`SparkSpec.afterEach`)
+  *     between tests — `spark.catalog.clearCache()` in all three.
   *   - A long-lived session (Thrift server, notebook) embedding these
   *     queries must uphold the same hygiene after consuming each
   *     result, or executor cache accumulates until eviction pressure.
@@ -28,8 +28,8 @@ package graft
   *
   *   - A cache the returned plan does NOT read is dropped at the
   *     operator (`Similarity.pagerank` unpersists edges/deg/nodes
-  *     after the final parquet round; the cluster loop drops per-hop
-  *     intermediates and superseded round files eagerly).
+  *     after the final parquet round; the cluster loop drops
+  *     superseded round files eagerly).
   *   - Composing seams expose explicit handles so pipelines reclaim
   *     eagerly instead of waiting for JVM exit:
   *     `Dedup.clustersFromPairsReleasable` / `IncrementalState

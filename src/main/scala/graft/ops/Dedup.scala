@@ -26,7 +26,7 @@ import graft.{ArtifactCache, Tables}
   * territory for the shuffle itself; candidate blow-up from oversized
   * buckets is bounded by the `MaxBucket` bucket-width cap in
   * `pairsFromBands` (measured on the adversarial boilerplate corpus —
-  * see `tools.Scale` and PERF.md).
+  * see PERF.md).
   */
 object Dedup {
 
@@ -448,7 +448,7 @@ object Dedup {
     * both engines by construction): an 8-byte long per element instead
     * of a 12-char string cuts the per-pair join payload ~3× and makes
     * the intersection a long-equality probe — measured 109 s → ~40 s
-    * on the 10× near-dup-dense corpus (`tools.Scale`), where every
+    * on the 10× near-dup-dense corpus, where every
     * candidate pair ships both docs' sets through two shuffles.
     *
     * The intersection is computed per candidate pair with
@@ -585,7 +585,7 @@ object Dedup {
     * near-dup chain over the exact KEEPERS only, then the loser rows
     * folded back in ([[augmentWithExactLosers]]).
     *
-    * Measured motivation (`tools.CurateThenIndex`, PERF.md round 12):
+    * Measured motivation (PERF.md round 12):
     * a duplicate clique WIDER than [[MaxBucket]] shares all 8 band
     * keys, so cap-evicted members lose every bucket membership at
     * once and leak through the LSH-only chain as unpaired singletons
@@ -634,21 +634,19 @@ object Dedup {
     * iterative graph algorithms; every per-round table is
     * O(nodes + edges).
     *
-    * HOP UNROLLING (`graft.cluster.hopsPerRound`, default 1): the loop
-    * can compose k hops into a single plan between materializations,
-    * cutting the ACTION count ~k×. MEASURED NEGATIVE at local[32]
+    * One hop per materialized round. Composing k hops into one plan
+    * between materializations was MEASURED NEGATIVE at local[32]
     * sf0.1 (PERF.md round 6): k=3 is ~2× SLOWER than k=1 across the
     * whole cluster family (dedup_clusters 14.6→24.0 s) — the k× extra
     * join work per round plus race-filled intermediate caches cost
-    * more than the saved per-action scheduler latency, and the round
-    * count doesn't fall k× because pointer jumping already collapses
-    * chains superlinearly, so late hops in a round are mostly wasted
-    * past-fixpoint work. The knob stays for environments where action
-    * latency genuinely dominates (very high scheduler RTT); default is
-    * the measured winner. */
+    * more than the saved per-action scheduler latency, and pointer
+    * jumping already collapses chains superlinearly. */
   private[graft] def clustersFromPairs(pairs: DataFrame): DataFrame =
     clustersFromPairsReleasable(pairs)._1
 
+  /** Label-table rows up to which the component loop broadcasts the
+    * labels into its per-round joins (the small-labels tier). */
+  private val BroadcastLabelsMax = 1000000L
 
   /** `clustersFromPairs` plus the iteration-storage handle: the final
     * round's parquet backs the returned DataFrame, so only the CALLER
@@ -669,9 +667,6 @@ object Dedup {
     // shuffle to build them (the round-6 snapshot carried them;
     // removing them measured dedup_clusters min-of-reps 13.2 -> 10.6 s
     // at sf0.1, ~2.5 s off every cluster-family query).
-    // A hop references the previous labels 4x (self, neighbor join,
-    // both pointer-jump sides) — the per-hop persist in the round loop
-    // is what keeps unrolled hops linear instead of 4^k (PERF.md r6).
     // Pre-partitioned by dst so the per-round neighbor-min aggregation
     // (groupBy dst) reuses the cached partitioning: when the label side
     // arrives by broadcast (small-labels tier below), the whole
@@ -802,12 +797,10 @@ object Dedup {
     // + the parquet write, no shuffle. Above the threshold (a
     // billion-doc dedup on a real cluster) everything falls back to
     // the plain hash-shuffle shape, which is the right plan there.
-    val bcMax = session.conf.getOption("graft.cluster.broadcastLabelsMax")
-      .map(_.toLong).getOrElse(1000000L)
     var small = false
     def tier(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // one propagation hop: min over (self, neighbors' labels, label of
-    // label). Composable — `l` may itself be an unmaterialized hop.
+    // label)
     def hop(l: DataFrame): DataFrame = {
       val nbrMin = edges
         .join(tier(l.select(col("id").as("src"), col("label"))), "src")
@@ -822,38 +815,20 @@ object Dedup {
           least(col("label"), coalesce(col("nbr_label"), col("label")), col("jump_label"))
             .as("label"))
     }
-    val hopsPerRound = math.max(1,
-      session.conf.getOption("graft.cluster.hopsPerRound").map(_.toInt).getOrElse(1))
     var (labels, labelSum, nNodes) = materialize(
       edges.groupBy(col("src").as("id"))
         .agg(min(col("dst")).as("m"))
         .select(col("id"), least(col("id"), col("m")).as("label")),
       0)
-    small = nNodes <= bcMax
+    small = nNodes <= BroadcastLabelsMax
     var converged = false
     var round = 0
     while (!converged && round < 40) {
-      // Chain hopsPerRound hops into ONE action. Each intermediate hop
-      // is persist()ed: a hop references its predecessor 4× (self,
-      // neighbor join, both jump sides), so an uncached chain executes
-      // the base subtree 4^k times — measured 10× slower per round at
-      // k=3. The cache truncates that to ~linear in k at zero extra
-      // actions (sibling stages may race-fill a partition of the same
-      // cached hop — duplicated work bounded by one hop's depth, never
-      // exponential). Intermediates are dropped as soon as the round's
-      // parquet is on disk.
-      val intermediates = Seq.newBuilder[DataFrame]
-      var cur = labels
-      for (_ <- 1 until hopsPerRound) {
-        cur = hop(cur).persist()
-        intermediates += cur
-      }
       // (A second path-compression jump per round was measured here
       // and reverted: −1 round only — the convergence tail is new
       // minima traversing EDGES, not label-chain depth — at +0.15 s
       // per round of extra join work. dedup_clusters 6.0 → 7.0 s.)
-      val (next, nextSum, _) = materialize(hop(cur), round + 1)
-      intermediates.result().foreach(_.unpersist(false))
+      val (next, nextSum, _) = materialize(hop(labels), round + 1)
       labels = next
       // round N's files are dead once round N+1 is materialized and
       // summed; delete eagerly so a long loop holds two rounds on disk
@@ -861,8 +836,6 @@ object Dedup {
       converged = nextSum == labelSum
       labelSum = nextSum
       round += 1
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(s"[clusters] round $round sum $nextSum t=${System.nanoTime()}")
     }
     // with pointer jumping the cap is unreachable for any real graph
     // (it would take diameter > 2^40); if it ever trips, say so loudly
@@ -1123,15 +1096,9 @@ object Dedup {
     */
   private[graft] def incrementalClusters(
       newDocs: DataFrame, priorCapped: DataFrame, priorClusters: DataFrame): IncrementalState = {
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (sys.env.contains("GRAFT_DEBUG")) {
-      System.err.println(f"[incr] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     // 1. delta-only text work
     val deltaBands = bandsFrom(shingleTableOf(newDocs)).persist()
     deltaBands.count()
-    lap("deltaBands")
     val deltaIds = newDocs.select("doc_id").distinct()
     // 2. re-cap every bucket the delta lands in, over vN capped ∪ delta
     val dirtyKeys = deltaBands.select("b", "key").distinct()
@@ -1141,7 +1108,6 @@ object Dedup {
         .union(deltaBands.select("doc_id", "b", "key")),
       MaxBucket).persist()
     recapped.count() // three consumers below; unmaterialized persist = recompute races
-    lap("recapped")
     // 3. dirty = a delta doc survived the cap (else membership is
     //    bit-identical to vN and the bucket contributes nothing new)
     val dirty = recapped.join(deltaIds, "doc_id").select("b", "key").distinct()
@@ -1169,7 +1135,6 @@ object Dedup {
       .select(col("doc_id"), col("cluster_id").as("super"))
       .persist()
     contractMap.count()
-    lap("contractMap")
     // 5. the CONTRACTED re-solve graph — this is what makes the loop
     //    pay for the delta, not the corpus: cluster interiors never
     //    re-enter it (a cold-started interior needs O(component
@@ -1196,7 +1161,6 @@ object Dedup {
     //    over their members (one hash join), splice with the untouched
     //    vN rows
     val (resolved, handle) = clustersFromPairsReleasable(edges)
-    lap("loop")
     val memberRows = contractMap
       .join(resolved.select(col("doc_id").as("super"), col("cluster_id").as("cid")), "super")
       .select(col("doc_id"), col("cid").as("cluster_id"),

@@ -1019,8 +1019,8 @@ object Relational {
       // tag folds a cheap DATA fingerprint (length+mtime of the two
       // source parquets) in with the dir hash, so an in-place
       // regeneration of the corpus — or a dir-hash collision — keys a
-      // fresh layout instead of silently serving a stale one (the
-      // kNN-index memo keys the same way for the same reason)
+      // fresh layout instead of silently serving a stale one
+      // (ArtifactCache keys the same way for the same reason)
       val fp = Seq("orders.parquet", "customer.parquet").map { f =>
         val p = new org.apache.hadoop.fs.Path(s"$dir/$f")
         val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)

@@ -900,8 +900,8 @@ object Similarity {
     * bucket n/2^bits is ≤ 8 — the IVF re-tune ladder's logic
     * ([[bitsFor]]) applied to the nav seed. Fixed 8-bit bands put
     * EVERY bucket over [[NavBucketCap]] on a ×100 corpus and the cap
-    * evicted the whole seed (measured: empty graph at 200k vectors —
-    * `tools.RetrievalScale`). Deterministic in n, so any engine (and
+    * evicted the whole seed (measured: empty graph at 200k vectors,
+    * PERF.md round 11). Deterministic in n, so any engine (and
     * the incremental maintainer) derives the same width; at 8 bits
     * the band layout is identical to the historical one, so the
     * oracle — which pins the driver scales, where bits = 8 — is
@@ -1041,8 +1041,8 @@ object Similarity {
     * heavy-tailed — the densest regions blow past any cap on EVERY
     * band at once, members end up with zero seed candidates, and
     * NN-descent can never re-attach a node whose neighborhood is
-    * empty (its candidates come from that neighborhood). Measured in
-    * the ×100 harness (planted mixture, `tools.RetrievalScale`):
+    * empty (its candidates come from that neighborhood). Measured on
+    * the ×100 planted-mixture corpus (PERF.md round 11):
     * drop → 31% seed-isolated nodes, 9.4 edges/node, walk recall
     * 11/30 at 200k; anchors → 0 isolated, 30/30 in the 50k
     * simulation that chose this rule. */
@@ -1130,7 +1130,7 @@ object Similarity {
     * 2–3 orders of magnitude wider than the vector table (measured
     * ×100: 168M candidate rows vs 200k vectors), so shuffle-joining
     * vectors onto it — twice — IS the build constant
-    * (`tools.NavBuildProfile`, PERF.md round 12): the broadcast tier
+    * (PERF.md round 12): the broadcast tier
     * turns both attaches map-side and leaves the round one light
     * exchange (the rank window over pruned (node, nbr, cos) rows).
     * Above the ceiling (a billion-vector corpus) the plain shuffle
@@ -1168,71 +1168,6 @@ object Similarity {
       .withColumn("cos", round(d(col("nv"), col("wv")) / (col("nn") * col("wn")), 6))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= NavDegree)
-      .select("node", "nbr_id")
-  }
-
-  /** DIVERSIFIED variant of [[navTopK]] — DiskANN-style occlusion
-    * pruning (non-recursive "strong prune") as dataflow: rank the
-    * top-`k0` candidates by cosine, then drop candidate w (beyond the
-    * never-pruned first 4 ranks) if ANY higher-ranked candidate v is
-    * closer to w than the node is WITH α = 1.2 slack in distance
-    * terms — 1.2·(1 − cos(v,w)) < 1 − cos(node,w) — and keep the
-    * first [[NavDegree]] survivors. (Plain α = 1 over-prunes tight
-    * clusters; see the α paragraph below for the measured reason.)
-    * This is what stops a >degree-sized near-dup cluster from
-    * saturating a node's whole neighbor list (the ×100 fragmentation
-    * the scale harness measured: recall 0/30 because every neighbor
-    * slot held a same-cluster twin). Non-recursive pruning may drop
-    * more than DiskANN's sequential rule but needs only one
-    * n×k0²-row pair join — no per-node loop.
-    *
-    * HARNESS-ONLY (`tools.DiversifyProbe`), and the measurements
-    * argue AGAINST promoting it into the default build: with α = 1.2
-    * + a keep-first-4 floor it matches the plain build at ×10 (30/30,
-    * build ×1.5) but does NOT rescue the ×100 near-dup regime (0/30,
-    * same as plain) — the top-k0 = 32 CANDIDATE set is already
-    * saturated by a 100-member cluster before any far node appears,
-    * so occlusion has nothing diverse to keep. Conclusion (PERF.md):
-    * when cluster size exceeds candidate width, neighbor
-    * diversification cannot substitute for near-dup DEDUP before
-    * indexing (`pipelines.Curation` → `pipelines.AnnIndex`, the order
-    * the engine already ships). */
-  private[graft] def navTopKDiversified(spark: SparkSession, v: DataFrame,
-      cand: DataFrame, k0: Int = 32, nOpt: Option[Long] = None): DataFrame = {
-    def d(a: Column, b: Column) = VectorFunctions.dot(spark, a, b)
-    val small = nOpt.getOrElse(v.count()) <= navBroadcastVecsMax(spark)
-    def tier(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val nodes = tier(v.select(col("vec_id").as("node"), col("v").as("nv"), col("norm").as("nn")))
-    val nbrs  = tier(v.select(col("vec_id").as("nbr_id"), col("v").as("wv"), col("norm").as("wn")))
-    val w = Window.partitionBy("node").orderBy(col("cos").desc, col("nbr_id"))
-    val ranked = cand.distinct()
-      .join(nodes, "node").join(nbrs, "nbr_id")
-      .withColumn("cos", round(d(col("nv"), col("wv")) / (col("nn") * col("wn")), 6))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k0)
-      .select("node", "nbr_id", "cos", "rn")
-      .localCheckpoint(true)
-    val hi = ranked.select(col("node"), col("nbr_id").as("v_id"), col("rn").as("rv"))
-    val lo = ranked.select(col("node"), col("nbr_id").as("w_id"),
-      col("cos").as("cw"), col("rn").as("rw"))
-    val vv = v.select(col("vec_id").as("v_id"), col("v").as("vv"), col("norm").as("vn"))
-    val wwT = v.select(col("vec_id").as("w_id"), col("v").as("wv2"), col("norm").as("wn2"))
-    // α-slack in distance terms (DiskANN α = 1.2): occlude w only if v
-    // is MEANINGFULLY closer to w than the node is — α = 1 over-prunes
-    // tight clusters to near-empty neighborhoods (measured 1/30 recall
-    // at ×10). The first 4 ranks are never pruned (HNSW's
-    // keepPrunedConnections floor), so no node goes under-connected.
-    val cvw = round(d(col("vv"), col("wv2")) / (col("vn") * col("wn2")), 6)
-    val occluded = hi.join(lo, "node").where(col("rv") < col("rw") && col("rw") > 4)
-      .join(vv, "v_id").join(wwT, "w_id")
-      .where((lit(1.0) - cvw) * lit(1.2) < (lit(1.0) - col("cw")))
-      .select(col("node").as("o_node"), col("w_id")).distinct()
-    val w2 = Window.partitionBy("node").orderBy("rn")
-    ranked.join(occluded,
-        ranked("node") === occluded("o_node") && ranked("nbr_id") === occluded("w_id"),
-        "left_anti")
-      .withColumn("rk", row_number().over(w2))
-      .where(col("rk") <= NavDegree)
       .select("node", "nbr_id")
   }
 
@@ -1295,11 +1230,9 @@ object Similarity {
     * adds the shard to the bucket key — refinement stays shard-local
     * for free because shard node sets are disjoint). */
   private[graft] def navGraphRounds(spark: SparkSession, v: DataFrame,
-      seedCand: DataFrame, diversified: Boolean = false): (DataFrame, () => Unit) = {
+      seedCand: DataFrame): (DataFrame, () => Unit) = {
     val n = v.count() // once per build session; every round's topK reuses it
-    def topK(cand: DataFrame): DataFrame =
-      if (diversified) navTopKDiversified(spark, v, cand, nOpt = Some(n))
-      else navTopK(spark, v, cand, n)
+    def topK(cand: DataFrame): DataFrame = navTopK(spark, v, cand, n)
     def und(e: DataFrame): DataFrame = navUnd(e)
 
     val iterDir = s"${graft.ops.IterState.rootFor(spark)}/nav_${java.util.UUID.randomUUID().toString.take(8)}"
@@ -2261,58 +2194,18 @@ object Similarity {
     (out, () => { elig.foreach(_.unpersist()); stages.release(); hstages.release() })
   }
 
-  /** Process-wide memo of the MATERIALIZED kNN index, keyed by corpus
-    * dir + a cheap data fingerprint (embeddings file length/mtime, so
-    * an in-place regeneration of the same dir is a new key rather than
-    * a silently stale index): the first caller builds the graph and
-    * lands it as parquet under the iteration root (`IterState`); every
-    * later caller — the whole graph family: `pagerank`, `labelProp`,
-    * `triangles`, `knnClassify`, and the `sim_knn_graph` query itself —
-    * reads the same files. This is the production posture, not a bench
-    * trick: a kNN graph is an INDEX ARTIFACT, built once per corpus
-    * version and consumed by every downstream graph pass; rebuilding
-    * the per-cell self-join five times for five consumers is the thing
-    * no real pipeline does. `graft.sim.knnIndexReuse=false` opts out
-    * of the cross-call memo: each call then builds and lands its OWN
-    * index copy (still parquet-backed, so the cell cache is still
-    * released eagerly — returning the lazy plan here would leak the
-    * cell persist to consumers with no release handle). Files are
-    * swept at JVM exit via the `IterState` registry. */
-  private val knnIndexPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The MATERIALIZED kNN index, an `ArtifactCache` artifact: the
+    * first caller builds the graph and lands it as parquet; every
+    * later caller on the same corpus version — the whole graph
+    * family: `pagerank`, `labelProp`, `triangles`, `knnClassify`, and
+    * the `sim_knn_graph` query itself — reads the same files. A kNN
+    * graph is an INDEX ARTIFACT, built once per corpus version and
+    * consumed by every downstream graph pass; rebuilding the per-cell
+    * self-join five times for five consumers is the thing no real
+    * pipeline does. */
+  private[graft] def knnGraphShared(spark: SparkSession, dir: String): DataFrame =
+    graft.ArtifactCache.tableReleasable(spark, "knn_index", dir)(knnGraphReleasable(spark, dir))
 
-  /** Cheap corpus fingerprint for the memo key: length + mtime of the
-    * embeddings file/dir footprint. */
-  private def corpusFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    s"${st.getLen}:${st.getModificationTime}"
-  }
-
-  private def buildKnnIndex(spark: SparkSession, dir: String): String =
-    graft.ArtifactCache.timedBuild("knn_index") {
-      val (g, releaseCells) = knnGraphReleasable(spark, dir)
-      val p = s"${IterState.rootFor(spark)}/knn_index_${java.util.UUID.randomUUID().toString.take(8)}"
-      IterState.register(spark, p)
-      g.write.mode("overwrite").parquet(p)
-      releaseCells()
-      p
-    }
-
-  private[graft] def knnGraphShared(spark: SparkSession, dir: String): DataFrame = {
-    val reuse = spark.conf.getOption("graft.sim.knnIndexReuse").forall(_.toBoolean)
-    val path =
-      if (reuse)
-        knnIndexPaths.computeIfAbsent(s"$dir@${corpusFingerprint(spark, dir)}",
-          _ => buildKnnIndex(spark, dir))
-      else buildKnnIndex(spark, dir)
-    spark.read.parquet(path)
-  }
-
-  /** `knnGraph` plus a release handle for its persisted cell table —
-    * call the handle once every consumer of the returned plan has
-    * materialized (the plan reads the cache, so releasing earlier
-    * would silently recompute). */
   /** The IVF re-tune ladder: sign-bit split depth for a cell/label of
     * width cn (doc at `knnGraph`). Deterministic in cn, so any engine
     * (and any incremental maintenance pass) derives the same tiers. */
@@ -2352,6 +2245,10 @@ object Similarity {
       .select(col("vec_id"), col("nbr_id"), col("cos"), col("rank").cast("bigint").as("rank"))
   }
 
+  /** `knnGraph` plus a release handle for its persisted cell table —
+    * call the handle once every consumer of the returned plan has
+    * materialized (the plan reads the cache, so releasing earlier
+    * would silently recompute). */
   def knnGraphReleasable(spark: SparkSession, dir: String): (DataFrame, () => Unit) = {
     val v0 = vecs(spark, dir)
     val widths = v0.groupBy("label").agg(count(lit(1)).as("cn"))
@@ -2404,8 +2301,8 @@ object Similarity {
 
   /** Edge-count driver-tier threshold, shared by `pagerankFrom` /
     * `labelPropFrom` / `kcoreFrom`; -1 forces the distributed loop
-    * (test seam). Default 1M is MEASURED (`tools.GraphTierLap`,
-    * 3-out-regular graphs, both tiers same session, PERF.md round 16):
+    * (test seam). Default 1M is MEASURED (3-out-regular
+    * graphs, both tiers same session, PERF.md round 16):
     * per-algorithm crossovers sit at ~1.2M (kcore), ~2M (labelProp),
     * ~4M (pagerank) edges, so one shared 1M default keeps every
     * algorithm inside its driver-win region while bounding the

@@ -1122,7 +1122,7 @@ object Text {
   /** Per-language fertility rollup over any (doc_id, n_chars,
     * n_tokens) encoding table — shared by the 5-merge oracle path
     * ([[bpeFertility]]) and the deep-vocabulary loop path
-    * ([[bpeFertilityWith]]). */
+    * ([[bpeDeepFertility]]). */
   private def fertilityRollup(spark: SparkSession, dir: String, enc: DataFrame): DataFrame =
     enc
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang"),
@@ -1156,8 +1156,8 @@ object Text {
     *     occurrence count, so per-round cost is O(vocabulary) — after
     *     the one corpus-wide vocab aggregate, cost is INDEPENDENT of
     *     corpus size, and the learned merges are invariant under
-    *     corpus duplication (counts scale uniformly; `tools.BpeScale`
-    *     asserts bit-identity at ×1/×10/×100).
+    *     corpus duplication (counts scale uniformly; measured
+    *     bit-identical at ×1/×10/×100, PERF.md).
     *
     * Stops early when no adjacent pair occurs ≥ 2 times (merging
     * singletons learns nothing; the unrolled oracle form never
@@ -1256,8 +1256,8 @@ object Text {
     * bytes, exactly Spark's binary string ordering) and the
     * leftmost-nonoverlapping merge, so the learned merge list is
     * BIT-IDENTICAL across tiers at every k (`TokenizerSpec` pins it;
-    * `tools.BpeScale` asserts ×1/×10/×100 invariance on the open
-    * corpus). Output: round, a, b, n. */
+    * ×1/×10/×100 invariance on the open corpus is measured in
+    * PERF.md). Output: round, a, b, n. */
   def bpeTrainTiered(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
     val max = bpeDriverVocabMax(spark)
     val fetch = (math.min(max, Int.MaxValue.toLong - 1L) + 1L).toInt
@@ -1415,7 +1415,7 @@ object Text {
     graft.ArtifactCache.table(spark, "text_bpe_merges_deep", dir)(
       bpeTrainTiered(spark, Tables.documents(spark, dir), BpeDeepK))
 
-  /** Fixed export root the DEEP merge table lands under, keyed by
+  /** Export root the DEEP merge table lands under, keyed by
     * corpus fingerprint — the seam that gives `text_bpe_deep` a real
     * DuckDB oracle (round-14 verdict ask #3): the TRAINER has no
     * feasible unrolled-SQL form (k ≤ [[BpeDeepK]] data-dependent
@@ -1425,8 +1425,12 @@ object Text {
     * with a sequential recursive-CTE fold, so encode + rollup are
     * independently recomputed and only the merge list is shared (the
     * `text_qclf_score` landed-model posture). Versioned path: bump
-    * the suffix if the trainer's election rule ever changes. */
-  private[graft] val BpeDeepExportDefault = "/root/repo/artifacts/bpe_deep_merges_v1"
+    * the suffix if the trainer's election rule ever changes. Unless
+    * `graft.bpe.deepMergesExportDir` says otherwise it lands under
+    * the JVM's working directory, so a checkout's runs write into
+    * that checkout. */
+  private[graft] val BpeDeepExportDefault =
+    s"${sys.props("user.dir")}/artifacts/bpe_deep_merges_v1"
 
   private def bpeDeepExportRoot(spark: SparkSession): String =
     spark.conf.getOption("graft.bpe.deepMergesExportDir")
@@ -1648,16 +1652,6 @@ object Text {
       .withColumn("ratio", round(col("n_tokens") / col("n_chars"), 6))
       .orderBy("doc_id")
   }
-
-  /** Per-language fertility under an arbitrary merge list — what a
-    * tokenizer evaluation actually reads at a realistic vocabulary
-    * size (`tools.BpeScale` measures the 5 → ~1k fertility shift per
-    * language). Output: lang, n_docs, n_words, n_tokens, fertility,
-    * chars_per_tok. */
-  def bpeFertilityWith(spark: SparkSession, dir: String,
-      merges: Seq[(String, String)]): DataFrame =
-    fertilityRollup(spark, dir,
-      bpeEncodeWith(spark, Tables.documents(spark, dir), merges))
 
   /** Cross-document SEGMENT-level dedup — the line-dedup pass of
     * CCNet/RefinedWeb-style curation adapted to this corpus' shape
@@ -2504,8 +2498,7 @@ object Text {
     }
 
   /** The training loop itself, over an arbitrary documents table —
-    * factored from the artifact so the scale harness
-    * (`tools.QclfScale`) can fit duplicated corpora directly.
+    * factored from the artifact so it fits any documents table.
     * Returns (weights, release-the-feats handle). */
   private[graft] def qclfFit(spark: SparkSession,
       docs: DataFrame): (DataFrame, () => Unit) = {

@@ -56,7 +56,7 @@ object Curation {
 
   /** The FUZZY-ONLY state build over an EXPLICIT corpus slice — the
     * LSH chain with no exact pre-pass. Kept as the measured BASELINE
-    * (`tools.CurateThenIndex` leg 2) and as the primitive
+    * (PERF.md round 12) and as the primitive
     * [[buildStateExactFirst]] composes; production entrypoints
     * ([[buildClusters]], [[run]]) default to exact-first, which the
     * ×100 harness showed is the only order that collapses duplicate
@@ -215,7 +215,7 @@ object Curation {
     * table (round 14). The `dedup_exact_first` driver query pins the
     * same composition against the DuckDB oracle.
     *
-    * Measured motivation (`tools.CurateThenIndex`, PERF.md round 12):
+    * Measured motivation (PERF.md round 12):
     * a duplicate clique WIDER than the LSH bucket cap
     * (`Dedup.MaxBucket` = 64) shares all 8 band keys, so cap-evicted
     * members lose every bucket membership at once and leak through
@@ -292,15 +292,6 @@ object Curation {
   def incrementState(spark: SparkSession, newDocs: DataFrame,
       priorRoot: String, nextRoot: String): Unit = {
     import org.apache.spark.sql.functions._
-    // GRAFT_DEBUG lap prints (the navinc discipline): the release's
-    // write-cost anatomy — delta-append mapping vs the remaining
-    // keeper-grain floors (keeper bands, keeper-pairs fuzzy decision;
-    // the corpus-sized composed-decision write is gone — round 14)
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (sys.env.contains("GRAFT_DEBUG")) {
-      System.err.println(f"[curinc] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val exactP = new org.apache.hadoop.fs.Path(s"${exactPath(priorRoot)}/_SUCCESS")
     val fs = exactP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a top-level _SUCCESS marks a mapping landed by an earlier
@@ -346,15 +337,13 @@ object Curation {
       // the mapping is append-only under the demotion refuse above,
       // so the next release lands ONLY the delta's rows — every prior
       // bucket is a manifest reference, zero prior-mapping I/O
-      lap("demotion probe")
       graft.io.BucketedTable.writeAppended(spark, withExactPb(deltaMap),
         exactPath(priorRoot), exactPath(nextRoot), ExactScheme)
       if (graft.io.BucketedTable.maxDirsPerBucket(spark, exactPath(nextRoot)) >
           compactMaxDirs(spark)) {
         graft.io.BucketedTable.compact(spark, exactPath(nextRoot),
           ExactSchema, ExactScheme)
-        lap("exact mapping delta append + compact")
-      } else lap("exact mapping delta append")
+      }
       val nextMap = exactMap(spark, nextRoot)
       // only NEW-group keepers enter the fuzzy chain; the prior fuzzy
       // decision is the composed table restricted to prior keepers
@@ -366,11 +355,8 @@ object Curation {
       val priorFuzzy = spark.read.parquet(clustersPath(priorRoot))
       val st = Dedup.incrementalClusters(newKeeperDocs,
         spark.read.parquet(bandsPath(priorRoot)), priorFuzzy)
-      lap("fuzzy increment plan")
       Writers.truncateLoad(st.bands.select("doc_id", "b", "key"), bandsPath(nextRoot))
-      lap("keeper band truncate-load (keeper-corpus floor)")
       Writers.truncateLoad(st.clusters, clustersPath(nextRoot))
-      lap("fuzzy decision truncate-load (keeper-pairs floor)")
       st.release()
       stampFuzzyLayout(spark, nextRoot)
     }

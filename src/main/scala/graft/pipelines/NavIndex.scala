@@ -131,10 +131,7 @@ object NavIndex {
 
   /** hash(b, key) bucket of a band row — pure function of the
     * immutable band coordinates. */
-  // private[graft]: tools.BandReadFloor measures the REAL layout's
-  // pruning with the engine's own bucket function (a replicated
-  // constant would silently diverge if PartBits changed)
-  private[graft] def bandPbOf(b: Column, key: Column): Column =
+  private def bandPbOf(b: Column, key: Column): Column =
     pmod(hash(b, key), lit(1 << PartBits))
 
   private def withBandPb(df: DataFrame): DataFrame =
@@ -408,11 +405,6 @@ object NavIndex {
     * vectors land as a pure append. */
   def incrementState(spark: SparkSession, deltaEmb: DataFrame,
       priorRoot: String, nextRoot: String): Unit = {
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (sys.env.contains("GRAFT_DEBUG")) {
-      System.err.println(f"[navinc] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     require(hasBandState(spark, priorRoot),
       s"prior nav-index version at $priorRoot predates the versioned band " +
         "state (pre-round-14 layout); rebuild the navigable graph with buildState")
@@ -420,7 +412,6 @@ object NavIndex {
     BucketedTable.writeAppended(spark, withPb(dv),
       vecsPath(priorRoot), vecsPath(nextRoot), Scheme)
     val v = readVecs(spark, nextRoot)
-    lap("land vecs (append)")
 
     // frontier tables (changed edges, affected node sets) are small —
     // delta-proportional — but each is READ several times per round
@@ -445,7 +436,6 @@ object NavIndex {
     require(Similarity.navBitsFor(nPrior) == Similarity.navBitsFor(nNext),
       s"corpus growth $nPrior -> $nNext crosses a seed-band width boundary; " +
         "rebuild the navigable graph with buildState")
-    lap("width guard counts")
     val pbm = mat(readVecsPbMap(spark, nextRoot), "pbm")
     val bits = Similarity.navBitsFor(nNext)
     // the delta's band rows — the ONLY explode of the increment
@@ -467,7 +457,6 @@ object NavIndex {
       BucketedTable.readParts(spark, bandsPath(priorRoot), BandsSchema,
           touchedBandPb, BandScheme)
         .join(touched, Seq("b", "key"), "left_semi"), "bandsp")
-    lap("delta bands + prior membership")
 
     // GROW-SPLICE classification (round 12 — the fix for "a 1%
     // increment costs a full rebuild", PERF.md): a touched bucket is
@@ -509,7 +498,6 @@ object NavIndex {
         .unionByName(cls.select(col("b"), col("key"),
           col("bnn").as("bn"), col("a0n").as("a0")))),
       touchedBandPb, bstatsPath(priorRoot), bstatsPath(nextRoot), BandScheme)
-    lap("bucket classification + stats splice")
     val flipB = cls.where(!col("grow")).select("b", "key")
     val growB = cls.where(col("grow")).select("b", "key", "bnn")
     // next-release members of flip buckets = prior members + delta
@@ -522,12 +510,10 @@ object NavIndex {
     val fullNodes = mat(
       flipNodes.unionByName(deltaIds.select(col("vec_id").as("node"))).distinct(),
       "full0")
-    lap("fullNodes")
     val growNodes = mat(
       bandsPrior.join(growB.select("b", "key"), Seq("b", "key"))
         .select(col("vec_id").as("node")).distinct()
         .join(fullNodes, Seq("node"), "left_anti"), "grow0")
-    lap("growNodes")
     // delta-contributed nbrs per grow bucket: every delta member of a
     // ≤cap bucket; only delta ANCHORS (quantized verdict at the NEXT
     // width) of an over-cap one
@@ -555,11 +541,9 @@ object NavIndex {
     val fullCand = Similarity.navSeedPairs(bands(spark, nextRoot), Seq("b", "key"),
       Some(fullNodes), Some(bstats(spark, nextRoot)))
     val affected0 = mat(growNodes.unionByName(fullNodes).distinct(), "aff0")
-    lap("affected0")
     var changed = mat(splice(spark, pbm, roundPath(priorRoot, 0), roundPath(nextRoot, 0),
       affected0,
       Similarity.navTopK(spark, v, growCand.unionByName(fullCand), nNext)), "chg0")
-    lap("seed topK+splice")
 
     // ---- refinement rounds: frontier = changed endpoints + their
     // old∪new neighbors; re-rank against the full new prior-round
@@ -579,7 +563,6 @@ object NavIndex {
           undIncident(ePri, m).unionByName(undIncident(ePrev, m))
             .select(col("nbr_id").as("node")))
         .distinct(), s"aff$r")
-      lap(s"round $r affected")
       // candidates over the CAPPED adjacency + the prior round's
       // directed edges — byte-identical to buildState's rule
       val aAff = mat(Similarity.navExpandAdj(undIncident(ePrev, affected)), s"ucap$r")
@@ -593,7 +576,6 @@ object NavIndex {
       val candAff = aAff.unionByName(hop2).unionByName(prevE)
       changed = mat(splice(spark, pbm, roundPath(priorRoot, r), roundPath(nextRoot, r),
         affected, Similarity.navTopK(spark, v, candAff, nNext)), s"chg$r")
-      lap(s"round $r topK+splice")
     }
     // ---- final graph: splice against the PRIOR graph. A node's
     // undirected row set changes only if a changed final-round edge
@@ -606,7 +588,6 @@ object NavIndex {
       .unionByName(changed.select(col("nbr_id").as("node"))).distinct(), "affg")
     splice(spark, pbm, graphPath(priorRoot), graphPath(nextRoot),
       affG, undIncident(eFin, affG))
-    lap("final graph splice")
     cleanup.release()
   }
 

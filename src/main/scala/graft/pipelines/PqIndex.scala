@@ -25,7 +25,7 @@ import graft.ops.Similarity
   * What guards codebook staleness: every landing records the mean
   * squared reconstruction error of ITS OWN rows under the codebook
   * it landed with (`pq_stats`). The maintainer routes a delta whose
-  * error exceeds `graft.pq.rebuildErrFactor` (default 1.5) × the
+  * error exceeds 1.5 × (`PqStreams.RebuildErrFactor`) the
   * training-time baseline to [[rebuildState]] — retrain + re-encode,
   * landing an ANCHOR — because high delta error means the frozen
   * centroids no longer cover the incoming distribution (the ADC

@@ -34,7 +34,7 @@ import graft.pipelines.AnnIndex
   * the increment re-pairs everything the rebuild would, plus splice
   * overhead. [[maintainBatch]] therefore routes to
   * [[AnnIndex.rebuildState]] when the delta's distinct labels exceed
-  * `graft.ann.rebuildLabelFrac` (default 0.5) of the prior corpus's —
+  * [[RebuildLabelFrac]] of the prior corpus's —
   * a two-aggregate probe, no pairing. Exactness is identical on both
   * paths (`pairCells` is deterministic given membership), so routing
   * changes cost, never content; rebuilds additionally land chain
@@ -48,17 +48,11 @@ object AnnStreams {
   private def versionRoot(root: String, b: Long): String = s"$root/v$b"
 
   /** Delta-distinct-labels / prior-labels fraction above which a
-    * batch routes to the warm rebuild. Default 0.5: a localized
-    * domain drop sits far under it, a uniform re-embedding sweep
-    * estimates ≈ 1.0 — separated regimes, not a tuned edge (the
-    * `IndexStreams.rebuildFrontierFrac` posture). */
-  private def rebuildLabelFrac(spark: SparkSession): Double =
-    spark.conf.getOption("graft.ann.rebuildLabelFrac").map { s =>
-      try s.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.ann.rebuildLabelFrac must be a fraction in [0,1], got '$s'")
-      }
-    }.getOrElse(0.5)
+    * batch routes to the warm rebuild. 0.5: a localized domain drop
+    * sits far under it, a uniform re-embedding sweep estimates ≈ 1.0
+    * — separated regimes, not a tuned edge (the
+    * `IndexStreams.RebuildFrontierFrac` posture). */
+  private val RebuildLabelFrac = 0.5
 
   /** The newest committed kNN graph under `root` (throws if none). */
   def currentGraph(spark: SparkSession, root: String): DataFrame = {
@@ -92,7 +86,7 @@ object AnnStreams {
         val priorRoot = versionRoot(root, prior)
         val dLabels = batch.select(col("label").cast("bigint")).distinct().count()
         val pLabels = spark.read.parquet(AnnIndex.widthsPath(priorRoot)).count()
-        if (pLabels > 0 && dLabels.toDouble / pLabels > rebuildLabelFrac(spark)) {
+        if (pLabels > 0 && dLabels.toDouble / pLabels > RebuildLabelFrac) {
           AnnIndex.rebuildState(spark, batch, priorRoot, next); "rebuild(labels)"
         } else {
           AnnIndex.incrementState(spark, batch, priorRoot, next); "increment"

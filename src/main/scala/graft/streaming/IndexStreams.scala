@@ -47,7 +47,7 @@ import graft.pipelines.NavIndex
   * (`NavIndex.seedFrontierFraction` — one delta-sized band projection
   * against a pruned read of the landed band table, no ranking) and
   * routes to the rebuild path when it
-  * exceeds `graft.nav.rebuildFrontierFrac` (default 0.5), the same
+  * exceeds [[RebuildFrontierFrac]], the same
   * contract posture as the width-boundary fallback. Exactness is
   * identical on every path, so routing can only change cost, never
   * content.
@@ -57,17 +57,11 @@ object IndexStreams {
   private def versionRoot(root: String, b: Long): String = s"$root/v$b"
 
   /** Estimated-frontier fraction above which a delta routes to the
-    * rebuild path. Default 0.5: measured localized deltas estimate
-    * well under it and uniform deltas estimate ≈ 1.0 at every scale
+    * rebuild path. 0.5: measured localized deltas estimate well
+    * under it and uniform deltas estimate ≈ 1.0 at every scale
     * (PERF.md round 13) — the regimes are separated by a wide gap,
     * not a tuned edge. */
-  private def rebuildFrontierFrac(spark: SparkSession): Double =
-    spark.conf.getOption("graft.nav.rebuildFrontierFrac").map { s =>
-      try s.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.nav.rebuildFrontierFrac must be a fraction in [0,1], got '$s'")
-      }
-    }.getOrElse(0.5)
+  private val RebuildFrontierFrac = 0.5
 
   /** Per-bucket directory-count ceiling above which a freshly-landed
     * increment version is compacted in place
@@ -103,8 +97,7 @@ object IndexStreams {
 
   /** Absorb one micro-batch of embedding rows as index version
     * `v<batchId>` — the foreachBatch body, callable directly for the
-    * batch-parity, replay, and routing specs and for
-    * `tools.NavMaintainScale`'s per-batch cost measurement. Returns
+    * batch-parity, replay, and routing specs. Returns
     * the path taken ("build" | "increment" | "rebuild(width)" |
     * "rebuild(frontier)") — deterministic in (batch, prior state), so
     * a replayed batch re-takes the same path. */
@@ -136,7 +129,7 @@ object IndexStreams {
           // layout): a rebuild lands it and re-opens the increment path
           NavIndex.rebuildState(spark, batch, priorRoot, next); "rebuild(layout)"
         } else if (NavIndex.seedFrontierFraction(spark, batch, priorRoot,
-            nPrior, nd) > rebuildFrontierFrac(spark)) {
+            nPrior, nd) > RebuildFrontierFrac) {
           NavIndex.rebuildState(spark, batch, priorRoot, next); "rebuild(frontier)"
         } else {
           NavIndex.incrementState(spark, batch, priorRoot, next)

@@ -24,7 +24,7 @@ import graft.pipelines.PqIndex
   * ROUTING (the PQ-specific drift rule): the delta's mean squared
   * recon error under the PRIOR codebook, against the baseline the
   * codebook recorded at training time. Error ≤
-  * `graft.pq.rebuildErrFactor` (default 1.5) × baseline → the frozen
+  * [[RebuildErrFactor]] × baseline → the frozen
   * codebook still covers the incoming distribution → INCREMENT
   * (encode the delta only). Above it → the centroids have drifted
   * off the data → REBUILD (retrain + re-encode, landing an anchor
@@ -35,13 +35,9 @@ object PqStreams {
 
   private def versionRoot(root: String, b: Long): String = s"$root/v$b"
 
-  private def rebuildErrFactor(spark: SparkSession): Double =
-    spark.conf.getOption("graft.pq.rebuildErrFactor").map { s =>
-      try s.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.pq.rebuildErrFactor must be a number, got '$s'")
-      }
-    }.getOrElse(1.5)
+  /** Delta recon error, as a multiple of the codebook's baseline,
+    * above which a batch routes to the rebuild path. */
+  private val RebuildErrFactor = 1.5
 
   /** The newest committed codes table under `root` (throws if none). */
   def currentCodes(spark: SparkSession, root: String): DataFrame = {
@@ -69,7 +65,7 @@ object PqStreams {
           PqIndex.codebook(spark, priorRoot))
         val base = PqIndex.stats(spark, priorRoot)
           .collect()(0).getAs[Double]("base_err")
-        if (base > 0 && dErr > rebuildErrFactor(spark) * base) {
+        if (base > 0 && dErr > RebuildErrFactor * base) {
           PqIndex.rebuildState(spark, batch, priorRoot, next); "rebuild(err)"
         } else {
           PqIndex.incrementState(spark, batch, priorRoot, next); "increment"

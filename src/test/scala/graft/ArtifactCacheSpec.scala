@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 /** Pins the artifact layer 20+ queries now read through: build-once
-  * memoization, the reuse opt-out, and content-fingerprint
+  * memoization and content-fingerprint
   * invalidation (an in-place data change must NOT serve a stale
   * artifact). */
 class ArtifactCacheSpec extends SparkSpec {
@@ -26,18 +26,6 @@ class ArtifactCacheSpec extends SparkSpec {
     assert(a.collect().map(_.getLong(0)).sorted === b.collect().map(_.getLong(0)).sorted)
     ArtifactCache.table(spark, "spec_memo", d2)(build())
     assert(builds === 2)
-  }
-
-  test("graft.artifactReuse=false rebuilds per call") {
-    val d = freshDir()
-    var builds = 0
-    def build() = { builds += 1; spark.range(2).toDF("n") }
-    spark.conf.set("graft.artifactReuse", "false")
-    try {
-      ArtifactCache.table(spark, "spec_noreuse", d)(build())
-      ArtifactCache.table(spark, "spec_noreuse", d)(build())
-      assert(builds === 2)
-    } finally spark.conf.unset("graft.artifactReuse")
   }
 
   test("an in-place content change is a new key, not a stale artifact") {

@@ -570,9 +570,9 @@ class PipelineSpec extends SparkSpec {
     // 70 identical docs share every band bucket; MaxBucket = 64 keeps
     // the lowest 64, so the 6 cap-evicted docs lose ALL bucket
     // memberships at once and leak through the LSH-only chain as
-    // unpaired singletons (measured at x100 scale by
-    // tools.CurateThenIndex — this is the unit-sized pin of the same
-    // defect). The exact pre-pass collapses the clique fully.
+    // unpaired singletons (measured at x100 scale, PERF.md round 12 —
+    // this is the unit-sized pin of the same defect). The exact
+    // pre-pass collapses the clique fully.
     val text = "the same exact boilerplate sentence repeated for every document in this bucket"
     val near = "a sufficiently long nearly duplicated document body whose text keeps going on and on"
     val docs = spark.range(0, 70)

@@ -13,7 +13,8 @@ import graft.ops._
   * bit-identical for label propagation (integer voting), and
   * identical at the 6-dp rounding contract for pagerank (the
   * distributed sum's aggregation order is nondeterministic below
-  * that). Also pins the off-spine edge semantics both tiers share. */
+  * that). Also pins the off-spine edge semantics both tiers share,
+  * and the kNN index memo the whole family reads. */
 class SimilarityTierSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,6 +33,19 @@ class SimilarityTierSpec extends SparkSpec {
     val nodes = Tables.embeddings(spark, sf).select(col("vec_id")).persist()
     nodes.count()
     (g, nodes)
+  }
+
+  test("the kNN index is built once per corpus version and shared") {
+    val first = Similarity.knnGraphShared(spark, sf).inputFiles.toSet
+    assert(first.nonEmpty)
+    assert(Similarity.knnGraphShared(spark, sf).inputFiles.toSet === first)
+    // the same bytes in a new directory are a new key: its own build
+    val copy = java.nio.file.Files.createTempDirectory("graft_knn_copy").toFile
+    org.apache.commons.io.FileUtils.copyFileToDirectory(
+      new java.io.File(sf, "embeddings.parquet"), copy)
+    val other = Similarity.knnGraphShared(spark, copy.getPath)
+    assert(other.inputFiles.toSet.intersect(first).isEmpty)
+    assert(other.count() === Similarity.knnGraphShared(spark, sf).count())
   }
 
   private def rows(df: DataFrame): Seq[Row2] =

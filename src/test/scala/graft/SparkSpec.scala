@@ -35,8 +35,8 @@ abstract class SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterEa
   def sf: String = TestSpark.sf
 
   /** Several ops persist() intermediates for intra-query fan-out and
-    * rely on the runner to release them (the contract Verify/Bench
-    * uphold); the shared test session needs the same hygiene or cached
+    * rely on the runner to release them (the contract Verify and the
+    * perfbench harness uphold); the shared test session needs the same hygiene or cached
     * RDDs accumulate monotonically across the suite. */
   override protected def afterEach(): Unit = {
     spark.catalog.clearCache()

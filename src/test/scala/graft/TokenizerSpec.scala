@@ -79,8 +79,17 @@ class TokenizerSpec extends SparkSpec {
     // the deep artifact trains under the same election rule on the
     // same corpus, so its first five merges ARE text_bpe_train's —
     // the prefix property that makes merges.take(j) the k=j tokenizer
+    // with graft.bpe.deepMergesExportDir unset, the merge export lands
+    // under the JVM's working directory — the checkout under test
+    assert(spark.conf.getOption("graft.bpe.deepMergesExportDir").isEmpty)
+    assert(!sys.props.contains("graft.bpe.deepMergesExportDir"))
+    val exportRoot = new java.io.File(sys.props("user.dir"), "artifacts/bpe_deep_merges_v1")
+    val export = new java.io.File(exportRoot, Text.corpusFp(docs).toString)
+    org.apache.commons.io.FileUtils.deleteDirectory(export)
     val deep = Text.bpeDeepFertility(spark, sf) // forces the artifact
     assert(deep.count() > 0)
+    assert(new java.io.File(export, "_SUCCESS").isFile)
+    assert(Text.oracleDeepMergesGlob === s"${exportRoot.getPath}/*/*.parquet")
     val deepMerges = graft.ArtifactCache.table(spark, "text_bpe_merges_deep", sf)(
       sys.error("artifact must already be landed")).orderBy("round")
     val prefix5 = deepMerges.limit(5)
