@@ -240,7 +240,7 @@ object BucketedTable {
     * mid-compact leaves the old manifest fully valid (data-first /
     * manifest-last, as everywhere). Nothing is deleted here: a
     * non-tip version's directories may be referenced by descendants,
-    * and reclamation stays version-grain (`IndexStreams.vacuum`,
+    * and reclamation stays version-grain ([[VersionChain.vacuum]],
     * which a compacted tip re-opens by becoming the chain anchor). */
   def compact(spark: SparkSession, path: String, schemaDdl: String,
       scheme: String): Unit = {
@@ -286,7 +286,7 @@ object BucketedTable {
     * matches its own entries. The retention primitive — a version
     * whose tables are all self-contained is a chain ANCHOR, and
     * everything strictly below the newest retained anchor is
-    * reclaimable (`streaming.IndexStreams.vacuum`). */
+    * reclaimable ([[VersionChain.vacuum]]). */
   private def entriesUnderPrefix(spark: SparkSession, lines: Seq[String],
       prefix: String): Boolean = {
     val q = qualified(fs(spark, prefix), prefix)

@@ -31,7 +31,7 @@ import graft.ops.Similarity
   * row-identical to a full rebuild over vN ∪ delta
   * (`PipelineSpec` proves it, including across a tier crossing).
   *
-  * STORAGE (round 13, the `NavIndex` discipline): `ann_cells` and
+  * STORAGE (the `NavIndex` discipline): `ann_cells` and
   * `ann_graph` are [[graft.io.BucketedTable]]s keyed by
   * hash(label) mod 2^[[PartBits]] — the LABEL is the touch grain
   * (touched cells belong to delta/re-celled labels by construction),
@@ -50,7 +50,7 @@ import graft.ops.Similarity
   * touched buckets, never recomputed — and untouched buckets are
   * neither read nor rewritten.
   */
-object AnnIndex {
+object AnnIndex extends graft.streaming.MaintainedIndex {
 
   def widthsPath(root: String): String = s"$root/ann_widths"
   def cellsPath(root: String): String  = s"$root/ann_cells"
@@ -74,91 +74,34 @@ object AnnIndex {
   private def pbOf(label: Column): Column =
     pmod(hash(label), lit(1 << PartBits))
 
-  /** The two bucketed state tables of a version with their schemas —
-    * the shared list of the anchor/compaction lifecycle (widths is
-    * O(#labels) plain parquet, landed whole, and needs neither). */
-  private def stateTables(root: String): Seq[(String, String)] =
-    Seq((cellsPath(root), CellsSchema), (graphPath(root), GraphSchema))
+  protected def tables(spark: SparkSession, root: String): Seq[(String, String, String)] =
+    Seq((cellsPath(root), CellsSchema, Scheme), (graphPath(root), GraphSchema, Scheme))
 
-  /** The version at `root` is a chain ANCHOR: both bucketed tables
-    * reference only their own directories (true of [[buildState]]
-    * outputs and of increments after [[compactState]]; never of a
-    * freshly-landed increment, whose untouched buckets reference the
-    * prior release) — the point below which older versions are
-    * reclaimable. A version missing a table (old layout, torn
-    * landing) is NOT an anchor rather than an error — retention scans
-    * must refuse, not crash (the `NavIndex.isAnchor` contract). */
-  private[graft] def isAnchor(spark: SparkSession, root: String): Boolean =
-    stateTables(root).forall { case (p, _) =>
-      BucketedTable.isSelfContainedIfCommitted(spark, p, root) }
+  /** Every landing writes widths → cells → graph, so the graph
+    * manifest is the version's last write. */
+  def isCommitted(spark: SparkSession, root: String): Boolean =
+    tables(spark, root).forall { case (p, _, _) => BucketedTable.isCommitted(spark, p) }
 
-  /** The ann-index version at `vroot` is COMMITTED: both bucketed
-    * state tables carry manifests. Both [[buildState]] and
-    * [[incrementState]] land widths → cells → graph in that order, so
-    * the graph manifest is the release's LAST write and a crash
-    * mid-landing can never count as a version. */
-  private def isStateCommitted(spark: SparkSession, vroot: String): Boolean =
-    stateTables(vroot).forall { case (p, _) =>
-      BucketedTable.isCommitted(spark, p) }
+  /** Delta-distinct-labels / prior-labels fraction above which a
+    * batch routes to the warm rebuild. A localized domain drop sits
+    * far under 0.5 and a uniform re-embedding sweep estimates ≈ 1.0:
+    * separated regimes, not a tuned edge. */
+  private val RebuildLabelFrac = 0.5
 
-  /** Committed ann-index versions under the chain `root` (layout
-    * `<root>/v<N>`, the shared `ChainRetention` convention). */
-  def committedVersions(spark: SparkSession, root: String): Seq[Long] =
-    graft.io.ChainRetention.committedVersions(spark, root,
-      isStateCommitted(spark, _))
-
-  /** ANCHORIFY the newest committed version of the chain at `root` —
-    * [[compactState]] addressed the way the other two chains address
-    * their tips (`Curation.compactReleases`, the maintainer-facing
-    * entry point [[vacuum]] pairs with). The tip has no descendants,
-    * so no other manifest references the directories it supersedes. */
-  def compactTip(spark: SparkSession, root: String): Unit = {
-    val vs = committedVersions(spark, root)
-    require(vs.nonEmpty, s"no committed ann-index version under $root")
-    compactState(spark, graft.io.ChainRetention.versionRoot(root, vs.last))
-  }
-
-  /** Retire old ann-index versions through the shared chain-retention
-    * rule (`graft.io.ChainRetention.vacuum` — the same lifecycle the
-    * nav chain and the curation release chain got in round 15): keep
-    * the newest `keepLast` committed versions, delete only strictly
-    * below the newest retained ANCHOR ([[isAnchor]] — a version whose
-    * untouched buckets still reference an ancestor pins that ancestor
-    * alive; safety over reclamation), then manifest-diff-sweep
-    * crashed-write orphans inside what stays. The ann chain's table
-    * set is fixed (cells + graph, like the nav chain), so no
-    * kind-loss guard beyond the anchor rule is needed. */
-  def vacuum(spark: SparkSession, root: String, keepLast: Int): Unit =
-    graft.io.ChainRetention.vacuum(spark, root, keepLast,
-      isStateCommitted(spark, _),
-      (_, vr) => isAnchor(spark, vr),
-      vr => stateTables(vr).flatMap { case (p, _) =>
-        BucketedTable.referencedDirs(spark, p) }.toSet,
-      (vr, live) => stateTables(vr).foreach { case (p, _) =>
-        BucketedTable.sweepOrphans(spark, p, live); () },
-      () => compactTip(spark, root))
-
-  /** ANCHORIFY the committed version at `root` — the `NavIndex`
-    * compaction lifecycle applied to the ann chain: rewrite every
-    * ancestor-referenced bucket locally (`BucketedTable.compact`,
-    * pure I/O, rows byte-equal, zero pairing recompute) so the
-    * version becomes self-contained and every older version of the
-    * chain is reclaimable. Splice-landed increments never grow
-    * per-bucket dir lists, so the only cost here is re-homing
-    * referenced buckets — bounded by one corpus-sized read+write. */
-  def compactState(spark: SparkSession, root: String): Unit = {
-    // committed/legacy guard (the NavIndex.compactState posture): on
-    // an old-layout or torn root, refuse toward rebuild instead of
-    // failing inside BucketedTable with the generic missing-manifest
-    // require
-    require(stateTables(root).forall { case (p, _) =>
-        BucketedTable.isCommitted(spark, p) },
-      s"ann-index version at $root is missing a committed bucketed " +
-        "state table (pre-bucketed layout or torn landing) — " +
-        "compacting it cannot land an anchor; rebuild the ann state " +
-        "with buildState")
-    stateTables(root).foreach { case (p, s) =>
-      BucketedTable.compact(spark, p, s, Scheme) }
+  /** The streaming route. The increment's touch grain is whole
+    * labels: a label-uniform delta touches every cell and re-pairs
+    * everything a rebuild would, plus splice overhead, so it
+    * rebuilds. `pairCells` is deterministic given membership, so
+    * routing changes cost, never content. */
+  def advance(spark: SparkSession, batch: DataFrame,
+      priorRoot: String, nextRoot: String): String = {
+    val dLabels = batch.select(col("label").cast("bigint")).distinct().count()
+    val pLabels = spark.read.parquet(widthsPath(priorRoot)).count()
+    if (pLabels > 0 && dLabels.toDouble / pLabels > RebuildLabelFrac) {
+      rebuildState(spark, batch, priorRoot, nextRoot); "rebuild(labels)"
+    } else {
+      incrementState(spark, batch, priorRoot, nextRoot); "increment"
+    }
   }
 
   /** Committed-version readers (see `NavIndex` — raw parquet reads
@@ -191,8 +134,8 @@ object AnnIndex {
     * that share a vec_id (anti-join on the delta's ids) — the
     * streaming maintainer's routing escape hatch (a label-uniform
     * delta touches every cell, so the increment machinery re-pairs
-    * everything anyway and the rebuild is the honest plan;
-    * `IndexStreams`' frontier-routing argument). Replace-not-union
+    * everything anyway and the rebuild is the honest plan, see
+    * [[advance]]). Replace-not-union
     * matters precisely for the delta shape that routes here: a
     * uniform RE-EMBEDDING sweep re-submits existing ids with new
     * vectors, and a plain union would silently index both the stale

@@ -33,7 +33,7 @@ import graft.ops.{Dedup, Text}
   * hash-joins cheaply, survives job restarts, and is auditable on its
   * own (which corpus rows were collapsed, and into which keeper).
   */
-object Curation {
+object Curation extends graft.io.VersionChain {
 
   def clustersPath(root: String): String = s"$root/dedup_clusters"
 
@@ -87,22 +87,6 @@ object Curation {
   /** Bucket-scheme id of the exact keeper mapping's manifests:
     * hash(md5 content hash) over [[ExactPartBits]] bits. */
   private[graft] val ExactScheme = s"md5hash/$ExactPartBits"
-
-  /** Per-bucket directory-count ceiling for the exact keeper mapping,
-    * above which a freshly-appended release compacts it in place
-    * (`BucketedTable.compact` — pure I/O, the `IndexStreams`
-    * `graft.nav.compactMaxDirs` posture): every release appends one
-    * directory to each delta-touched content-hash bucket, so a daily
-    * release chain is ~365 dirs/bucket/year of small-file scan tax
-    * without it. The tip has no descendants yet, so the rewrite can
-    * never tear an existing reader. */
-  private def compactMaxDirs(spark: SparkSession): Int =
-    spark.conf.getOption("graft.curation.compactMaxDirs").map { s =>
-      try s.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.curation.compactMaxDirs must be an integer dir count, got '$s'")
-      }
-    }.getOrElse(8)
 
   /** The exact keeper mapping is the one CORPUS-SIZED table of the
     * release state (one row per doc), and the release chain only ever
@@ -339,11 +323,10 @@ object Curation {
       // bucket is a manifest reference, zero prior-mapping I/O
       graft.io.BucketedTable.writeAppended(spark, withExactPb(deltaMap),
         exactPath(priorRoot), exactPath(nextRoot), ExactScheme)
-      if (graft.io.BucketedTable.maxDirsPerBucket(spark, exactPath(nextRoot)) >
-          compactMaxDirs(spark)) {
-        graft.io.BucketedTable.compact(spark, exactPath(nextRoot),
-          ExactSchema, ExactScheme)
-      }
+      // every release appends a directory to each delta-touched
+      // bucket; the tip has no descendants yet, so compacting it can
+      // never tear a reader
+      compactIfWide(spark, nextRoot)
       val nextMap = exactMap(spark, nextRoot)
       // only NEW-group keepers enter the fuzzy chain; the prior fuzzy
       // decision is the composed table restricted to prior keepers
@@ -417,9 +400,8 @@ object Curation {
     * the increment is exact by construction: winnow ONLY the delta
     * and land it as a delta append under the next versioned root —
     * zero prior-table I/O, row-identical to a full rebuild
-    * (`PipelineSpec` pins it). Auto-compacts past the same
-    * `graft.curation.compactMaxDirs` ceiling as the exact mapping, so
-    * a long release chain keeps ~1 dir/bucket. */
+    * (`PipelineSpec` pins it). Compacts past the same dir-count
+    * ceiling as the exact mapping ([[compactIfWide]]). */
   def incrementWinnowIndex(spark: SparkSession, newDocs: DataFrame,
       priorRoot: String, nextRoot: String): Unit = {
     require(graft.io.BucketedTable.isCommitted(spark, winnowPath(priorRoot)),
@@ -429,10 +411,7 @@ object Curation {
     graft.io.BucketedTable.writeAppended(spark,
       withWinnowPb(Text.winnowFrom(newDocs)),
       winnowPath(priorRoot), winnowPath(nextRoot), WinnowScheme)
-    if (graft.io.BucketedTable.maxDirsPerBucket(spark, winnowPath(nextRoot)) >
-        compactMaxDirs(spark))
-      graft.io.BucketedTable.compact(spark, winnowPath(nextRoot),
-        WinnowSchema, WinnowScheme)
+    compactIfWide(spark, nextRoot)
   }
 
   /** Stage 2a: the deduplicated corpus, derived by READING the
@@ -599,23 +578,10 @@ object Curation {
     Writers.truncateLoad(manifest, s"$root/training_manifest")
   }
 
-  // ---- Release-chain retention (round 15) — the `IndexStreams`
-  // vacuum/compact/anchor lifecycle applied to the CURATION chain.
-  // A release chain lands versioned roots `<chain>/v<N>` (the
-  // `incrementState` convention); the exact keeper mapping and the
-  // winnow index are bucketed delta-append tables whose increments
-  // REFERENCE ancestor versions' buckets by manifest, so deleting an
-  // old release naively would tear every newer one — the identical
-  // reference-counting problem the nav chain solved, with the
-  // identical resolution: compaction turns the tip self-contained
-  // (an ANCHOR), and vacuum deletes only strictly below the newest
-  // retained anchor, then manifest-diff-sweeps crashed-write orphans
-  // inside what stays.
-
-  /** The bucketed chain tables PRESENT under a release root (the
-    * whole-landed tables — bands, fuzzy decision — are self-contained
-    * per release by construction and need no lifecycle). */
-  private def chainTables(spark: SparkSession, vroot: String): Seq[(String, String, String)] = {
+  /** The bucketed tables PRESENT under a release root: a chain may
+    * carry the exact mapping, the winnow index, or both. Bands and the
+    * fuzzy decision are landed whole, self-contained per release. */
+  protected def tables(spark: SparkSession, vroot: String): Seq[(String, String, String)] = {
     val fs = new org.apache.hadoop.fs.Path(vroot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq((exactPath(vroot), ExactSchema, ExactScheme),
@@ -623,15 +589,13 @@ object Curation {
       .filter { case (p, _, _) => fs.exists(new org.apache.hadoop.fs.Path(p)) }
   }
 
-  /** The release at `vroot` is COMMITTED — judged by its composition's
-    * LAST-landed artifact, so a crash mid-release can never count:
-    * an exact-first release (mapping present) commits with the layout
-    * marker (landed after bands + clusters — a mapping WITHOUT the
-    * marker is a torn landing, not a legacy layout, which the
-    * increment path refuses separately); a fuzzy-only release commits
-    * with the clusters `_SUCCESS` (its last write); a winnow-only
-    * chain commits with the winnow manifest. */
-  private def isReleaseCommitted(spark: SparkSession, vroot: String): Boolean = {
+  /** Judged by the composition's LAST-landed artifact: an exact-first
+    * release (mapping present) commits with the layout marker, landed
+    * after bands and clusters (a mapping without it is a torn landing,
+    * which the increment path refuses separately); a fuzzy-only
+    * release with the clusters `_SUCCESS`; a winnow-only chain with
+    * the winnow manifest. */
+  def isCommitted(spark: SparkSession, vroot: String): Boolean = {
     val fs = new org.apache.hadoop.fs.Path(vroot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (graft.io.BucketedTable.isCommitted(spark, exactPath(vroot)))
@@ -639,68 +603,5 @@ object Curation {
     else if (fs.exists(new org.apache.hadoop.fs.Path(clustersPath(vroot))))
       fs.exists(new org.apache.hadoop.fs.Path(s"${clustersPath(vroot)}/_SUCCESS"))
     else graft.io.BucketedTable.isCommitted(spark, winnowPath(vroot))
-  }
-
-  /** Committed release versions under `root`, ascending. */
-  private[graft] def committedReleases(spark: SparkSession, root: String): Seq[Long] =
-    graft.io.ChainRetention.committedVersions(spark, root,
-      isReleaseCommitted(spark, _))
-
-  /** The release at `vroot` is a chain ANCHOR: every bucketed chain
-    * table present references only its own directories. True of full
-    * builds and of tips after [[compactReleases]]; never of a
-    * freshly-incremented release (its mapping append references the
-    * prior release). A torn table (dir without manifest) is NOT an
-    * anchor rather than an error — retention must refuse, not crash
-    * (the `NavIndex.isAnchor` contract). */
-  private[graft] def isReleaseAnchor(spark: SparkSession, vroot: String): Boolean =
-    chainTables(spark, vroot).forall { case (p, _, _) =>
-      graft.io.BucketedTable.isSelfContainedIfCommitted(spark, p, vroot) }
-
-  /** ANCHORIFY the newest committed release: compact each bucketed
-    * chain table of the tip into self-contained one-dir-per-bucket
-    * form (pure I/O, rows byte-equal — `BucketedTable.compact`). The
-    * tip has no descendants, so no other manifest references the
-    * superseded directories. After this, [[vacuumReleases]] can
-    * reclaim the whole pre-compact chain. */
-  def compactReleases(spark: SparkSession, root: String): Unit = {
-    val vs = committedReleases(spark, root)
-    require(vs.nonEmpty, s"no committed release under $root")
-    val tip = graft.io.ChainRetention.versionRoot(root, vs.last)
-    chainTables(spark, tip).foreach { case (p, s, sch) =>
-      require(graft.io.BucketedTable.isCommitted(spark, p),
-        s"release state table at $p has no committed manifest (earlier " +
-          "layout or torn landing) — rebuild the release with " +
-          "buildStateExactFirst/buildWinnowIndex")
-      graft.io.BucketedTable.compact(spark, p, s, sch)
-    }
-  }
-
-  /** Retire old releases through the shared chain-retention rule
-    * (`graft.io.ChainRetention.vacuum`): keep the newest `keepLast`
-    * committed versions, delete only strictly below the newest
-    * retained anchor, sweep crashed-write orphans inside what stays.
-    * One guard beyond the nav chain's (whose table set is fixed): an
-    * anchor candidate must CARRY every chain-table kind any OLDER
-    * committed release carries — a tip that lost a kind to a crash
-    * (e.g. incrementState landed but incrementWinnowIndex never ran)
-    * must not let vacuum delete the ancestors holding that kind's
-    * only state; repair the tip first. */
-  def vacuumReleases(spark: SparkSession, root: String, keepLast: Int): Unit = {
-    val vs = committedReleases(spark, root)
-    def kinds(b: Long): Set[String] =
-      chainTables(spark, graft.io.ChainRetention.versionRoot(root, b))
-        .map { case (p, _, _) => p.split("/").last }.toSet
-    graft.io.ChainRetention.vacuum(spark, root, keepLast,
-      isReleaseCommitted(spark, _),
-      (b, vr) => {
-        val older = vs.filter(_ < b).flatMap(kinds).toSet
-        isReleaseAnchor(spark, vr) && older.subsetOf(kinds(b))
-      },
-      vr => chainTables(spark, vr).flatMap { case (p, _, _) =>
-        graft.io.BucketedTable.referencedDirs(spark, p) }.toSet,
-      (vr, live) => chainTables(spark, vr).foreach { case (p, _, _) =>
-        graft.io.BucketedTable.sweepOrphans(spark, p, live); () },
-      () => compactReleases(spark, root))
   }
 }

@@ -80,7 +80,7 @@ import graft.ops.Similarity
   * never recomputed, and untouched buckets are neither read NOR
   * rewritten.
   */
-object NavIndex {
+object NavIndex extends graft.streaming.MaintainedIndex {
 
   def vecsPath(root: String): String       = s"$root/nav_vecs"
   def roundPath(root: String, r: Int): String = s"$root/nav_e$r"
@@ -145,8 +145,8 @@ object NavIndex {
     BucketedTable.read(spark, bstatsPath(root), BStatsSchema)
 
   /** The prior version carries the versioned band state (absent on
-    * pre-round-14 layouts — `IndexStreams.maintainBatch` routes those
-    * to a rebuild, which lands the new layout). */
+    * earlier layouts; [[advance]] routes those to a rebuild, which
+    * lands the new layout). */
   private[graft] def hasBandState(spark: SparkSession, root: String): Boolean =
     BucketedTable.isCommitted(spark, bandsPath(root)) &&
       BucketedTable.isCommitted(spark, bstatsPath(root))
@@ -185,84 +185,48 @@ object NavIndex {
   def graph(spark: SparkSession, root: String): DataFrame =
     BucketedTable.read(spark, graphPath(root), RoundSchema)
 
-  /** A complete index version is committed at `root` (the graph —
-    * the last table every path lands — has a manifest). */
-  private[graft] def isCommitted(spark: SparkSession, root: String): Boolean =
+  /** The graph is the last table every path lands, so its manifest
+    * commits the version. */
+  def isCommitted(spark: SparkSession, root: String): Boolean =
     BucketedTable.isCommitted(spark, graphPath(root))
 
-  /** Every state table of a version, with its declared schema — the
-    * one list [[isAnchor]], [[compactState]] and the dir-count
-    * routing signal share, so a new state table cannot silently fall
-    * out of the anchor/compaction contract. */
-  private def stateTables(root: String): Seq[(String, String, String)] =
+  protected def tables(spark: SparkSession, root: String): Seq[(String, String, String)] =
     Seq((vecsPath(root), VecsSchema, Scheme),
       (graphPath(root), RoundSchema, Scheme),
       (bandsPath(root), BandsSchema, BandScheme),
       (bstatsPath(root), BStatsSchema, BandScheme)) ++
       (0 to Rounds).map(r => (roundPath(root, r), RoundSchema, Scheme))
 
-  /** The version at `root` is a chain ANCHOR: every state table
-    * references only its own directories (true of [[buildState]] and
-    * [[rebuildState]] outputs, and of increments AFTER
-    * [[compactState]]; never of a freshly-landed increment, whose
-    * vector append always references the prior release) — the point
-    * below which older versions are reclaimable. A version missing a
-    * state table (a pre-band-state layout, or a torn landing) is NOT
-    * an anchor rather than an error: `IndexStreams.vacuum` scans
-    * every retained version through this predicate, and an upgraded
-    * chain must make it refuse toward the next rebuild, not crash. */
-  private[graft] def isAnchor(spark: SparkSession, root: String): Boolean =
-    stateTables(root).forall { case (p, _, _) =>
-      BucketedTable.isSelfContainedIfCommitted(spark, p, root) }
+  /** Estimated-frontier fraction above which a delta routes to the
+    * rebuild path. Localized deltas estimate well under 0.5 and
+    * uniform deltas ≈ 1.0 at every measured scale (PERF.md), so the
+    * regimes are separated by a wide gap, not a tuned edge. */
+  private val RebuildFrontierFrac = 0.5
 
-  /** ANCHORIFY the committed version at `root`: rewrite every state
-    * table into self-contained one-dir-per-bucket form
-    * ([[graft.io.BucketedTable.compact]]) — pure I/O, zero graph
-    * recompute, rows byte-equal, so parity is trivial. This is the
-    * lifecycle step an increment-only chain was missing (round-13
-    * verdict #1): a purely-localized workload appends a directory per
-    * increment to its hot vector buckets forever, and no version ever
-    * anchors, so `IndexStreams.vacuum` correctly refuses to reclaim
-    * anything. Compacting the tip (a) caps the per-read dir-list tax
-    * at ~1 dir/bucket and (b) turns the tip into a chain anchor, so
-    * the next vacuum reclaims the whole pre-compact chain — minor
-    * compaction + checkpointing, the lake-format lifecycle, on the
-    * same Hadoop-FS primitives. Buckets already settled (one local
-    * dir) are carried at zero cost, so the rewrite cost tracks the
-    * referenced+appended mass, bounded by one corpus-sized read+write
-    * with no ranking work. */
-  def compactState(spark: SparkSession, root: String): Unit = {
-    require(hasBandState(spark, root),
-      s"nav-index version at $root predates the versioned band state " +
-        "(pre-round-14 layout) — compacting it cannot land an anchor; " +
-        "rebuild the navigable graph with buildState")
-    stateTables(root).foreach { case (p, s, sch) =>
-      BucketedTable.compact(spark, p, s, sch) }
+  /** The streaming route: a batch that crosses a seed-band width
+    * boundary re-buckets every seed, which an increment cannot honor;
+    * a prior without versioned band state needs a rebuild to land it;
+    * a uniform delta's frontier is the corpus, where the increment
+    * pays more than a warm rebuild. Only a localized delta increments,
+    * compacting the landed version past the dir-count ceiling.
+    * Exactness is identical on every path: routing changes cost,
+    * never content. */
+  def advance(spark: SparkSession, batch: DataFrame,
+      priorRoot: String, nextRoot: String): String = {
+    val nPrior = readVecs(spark, priorRoot).count()
+    val nd = batch.count()
+    if (Similarity.navBitsFor(nPrior) != Similarity.navBitsFor(nPrior + nd)) {
+      rebuildState(spark, batch, priorRoot, nextRoot); "rebuild(width)"
+    } else if (!hasBandState(spark, priorRoot)) {
+      rebuildState(spark, batch, priorRoot, nextRoot); "rebuild(layout)"
+    } else if (seedFrontierFraction(spark, batch, priorRoot, nPrior, nd) >
+        RebuildFrontierFrac) {
+      rebuildState(spark, batch, priorRoot, nextRoot); "rebuild(frontier)"
+    } else {
+      incrementState(spark, batch, priorRoot, nextRoot)
+      if (compactIfWide(spark, nextRoot)) "increment+compact" else "increment"
+    }
   }
-
-  /** Union of every data-directory URI the version's state-table
-    * manifests reference — one version's contribution to the
-    * chain-wide live set `IndexStreams.vacuum`'s orphan sweep
-    * subtracts from. */
-  private[graft] def referencedDirs(spark: SparkSession, root: String): Set[String] =
-    stateTables(root).flatMap { case (p, _, _) =>
-      BucketedTable.referencedDirs(spark, p) }.toSet
-
-  /** Manifest-diff sweep of crashed-write leftovers across the
-    * version's state tables ([[graft.io.BucketedTable.sweepOrphans]]);
-    * `referenced` must union [[referencedDirs]] over every retained
-    * version. Returns the deleted directories. */
-  private[graft] def sweepOrphans(spark: SparkSession, root: String,
-      referenced: Set[String]): Seq[String] =
-    stateTables(root).flatMap { case (p, _, _) =>
-      BucketedTable.sweepOrphans(spark, p, referenced) }
-
-  /** The widest per-bucket directory list across the version's state
-    * tables — the signal `IndexStreams.maintainBatch` routes
-    * compaction on (manifest-only driver reads, no data I/O). */
-  private[graft] def maxDirsPerBucket(spark: SparkSession, root: String): Int =
-    stateTables(root).map { case (p, _, _) =>
-      BucketedTable.maxDirsPerBucket(spark, p) }.max
 
   /** Land the vector table (full write) plus its band state — the
     * seam the width-boundary guard spec uses to stage a prior state
@@ -298,7 +262,7 @@ object NavIndex {
 
   /** The round chain over ALREADY-landed vectors at `root` — the seam
     * [[buildState]] and the width-boundary full-rebuild fallback of
-    * `streaming.IndexStreams` share. The corpus is counted ONCE and
+    * [[advance]] share. The corpus is counted ONCE and
     * the size threaded through every `navTopK` tier decision. */
   private[pipelines] def buildRounds(spark: SparkSession, root: String,
       bandStateStaged: Boolean = false): Unit = {
@@ -356,10 +320,9 @@ object NavIndex {
     * [[incrementState]]'s seed round re-ranks or grow-splices, as a
     * fraction of the corpus, at the cost of one delta-sized band
     * projection and a partition-pruned read of the landed band table
-    * (no ranking, no state writes). The routing signal
-    * `streaming.IndexStreams.maintainBatch` reads: a LOCALIZED delta
-    * (new content domain) touches few buckets and increments beat
-    * rebuilds there; a UNIFORM delta of any size touches nearly every
+    * (no ranking, no state writes). The routing signal [[advance]]
+    * reads: a LOCALIZED delta (new content domain) touches few
+    * buckets and increments beat rebuilds there; a UNIFORM delta of any size touches nearly every
     * bucket — its true frontier IS the corpus — and the rebuild is
     * measured cheaper (PERF.md rounds 12–13). Requires the prior and
     * next corpus to share a band width; callers check the width
@@ -372,10 +335,9 @@ object NavIndex {
   }
 
   /** [[seedFrontierFraction]] with the prior/delta sizes THREADED from
-    * the caller — `streaming.IndexStreams.maintainBatch` already
-    * counted both for its width-boundary check, and re-counting here
-    * was two redundant jobs per micro-batch (the `navTopK` lesson
-    * applied to routing). */
+    * the caller: [[advance]] already counted both for its
+    * width-boundary check, and re-counting here would be two
+    * redundant jobs per micro-batch. */
   private[graft] def seedFrontierFraction(spark: SparkSession, deltaEmb: DataFrame,
       priorRoot: String, nPrior: Long, nd: Long): Double = {
     val dv = Similarity.vecsOf(spark, deltaEmb).select("vec_id", "v", "norm")

@@ -25,7 +25,7 @@ import graft.ops.Similarity
   * What guards codebook staleness: every landing records the mean
   * squared reconstruction error of ITS OWN rows under the codebook
   * it landed with (`pq_stats`). The maintainer routes a delta whose
-  * error exceeds 1.5 × (`PqStreams.RebuildErrFactor`) the
+  * error exceeds 1.5 × ([[RebuildErrFactor]]) the
   * training-time baseline to [[rebuildState]] — retrain + re-encode,
   * landing an ANCHOR — because high delta error means the frozen
   * centroids no longer cover the incoming distribution (the ADC
@@ -55,7 +55,7 @@ import graft.ops.Similarity
   * Quantization for Nearest Neighbor Search" (TPAMI 2011); the
   * rerank split mirrors Subramanya et al., "DiskANN" (NeurIPS 2019).
   */
-object PqIndex {
+object PqIndex extends graft.streaming.MaintainedIndex {
 
   def codebookPath(root: String): String = s"$root/pq_codebook"
   def statsPath(root: String): String    = s"$root/pq_stats"
@@ -81,47 +81,34 @@ object PqIndex {
 
   private def pbOf(id: Column): Column = pmod(hash(id), lit(1 << PartBits))
 
-  private def stateTables(root: String): Seq[(String, String)] =
-    Seq((vecsPath(root), VecsSchema), (codesPath(root), CodesSchema))
+  protected def tables(spark: SparkSession, root: String): Seq[(String, String, String)] =
+    Seq((vecsPath(root), VecsSchema, Scheme), (codesPath(root), CodesSchema, Scheme))
 
-  private[graft] def isAnchor(spark: SparkSession, root: String): Boolean =
-    stateTables(root).forall { case (p, _) =>
-      BucketedTable.isSelfContainedIfCommitted(spark, p, root) }
+  /** Every landing writes codebook → stats → vecs → codes, so the
+    * codes manifest is the version's last write. */
+  def isCommitted(spark: SparkSession, root: String): Boolean =
+    tables(spark, root).forall { case (p, _, _) => BucketedTable.isCommitted(spark, p) }
 
-  /** Committed = both bucketed tables carry manifests; every landing
-    * writes codebook → stats → vecs → CODES last, so the codes
-    * manifest is the version's commit marker. */
-  private def isStateCommitted(spark: SparkSession, vroot: String): Boolean =
-    stateTables(vroot).forall { case (p, _) =>
-      BucketedTable.isCommitted(spark, p) }
+  /** Delta recon error, as a multiple of the codebook's baseline,
+    * above which a batch routes to the rebuild path. */
+  private val RebuildErrFactor = 1.5
 
-  def committedVersions(spark: SparkSession, root: String): Seq[Long] =
-    graft.io.ChainRetention.committedVersions(spark, root,
-      isStateCommitted(spark, _))
-
-  def compactTip(spark: SparkSession, root: String): Unit = {
-    val vs = committedVersions(spark, root)
-    require(vs.nonEmpty, s"no committed pq-index version under $root")
-    compactState(spark, graft.io.ChainRetention.versionRoot(root, vs.last))
-  }
-
-  def vacuum(spark: SparkSession, root: String, keepLast: Int): Unit =
-    graft.io.ChainRetention.vacuum(spark, root, keepLast,
-      isStateCommitted(spark, _),
-      (_, vr) => isAnchor(spark, vr),
-      vr => stateTables(vr).flatMap { case (p, _) =>
-        BucketedTable.referencedDirs(spark, p) }.toSet,
-      (vr, live) => stateTables(vr).foreach { case (p, _) =>
-        BucketedTable.sweepOrphans(spark, p, live); () },
-      () => compactTip(spark, root))
-
-  def compactState(spark: SparkSession, root: String): Unit = {
-    require(stateTables(root).forall { case (p, _) =>
-        BucketedTable.isCommitted(spark, p) },
-      s"pq-index version at $root is missing a committed bucketed " +
-        "state table (torn landing) — rebuild with buildState")
-    stateTables(root).foreach { case (p, s) =>
-      BucketedTable.compact(spark, p, s, Scheme) }
+  /** The streaming route: the delta's mean squared recon error under
+    * the prior codebook against the baseline recorded at training
+    * time. Within [[RebuildErrFactor]] × baseline the frozen codebook
+    * still covers the incoming distribution and the delta is encoded
+    * alone; above it the centroids have drifted off the data and the
+    * index retrains, landing an anchor and a fresh baseline. */
+  def advance(spark: SparkSession, batch: DataFrame,
+      priorRoot: String, nextRoot: String): String = {
+    val dv = Similarity.vecsOf(spark, batch).select("vec_id", "v", "norm")
+    val dErr = reconErr(spark, dv, codebook(spark, priorRoot))
+    val base = stats(spark, priorRoot).collect()(0).getAs[Double]("base_err")
+    if (base > 0 && dErr > RebuildErrFactor * base) {
+      rebuildState(spark, batch, priorRoot, nextRoot); "rebuild(err)"
+    } else {
+      incrementState(spark, batch, priorRoot, nextRoot); "increment"
+    }
   }
 
   def codebook(spark: SparkSession, root: String): DataFrame =

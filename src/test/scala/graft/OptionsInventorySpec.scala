@@ -6,12 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Locks the program's configuration surface: the exact `graft.*`
-  * conf keys and environment variables `src/main` reads. A new option
-  * fails the suite until the change adds it here, visibly, with the
-  * reason it cannot be a constant (the `PlanAuditSpec` inventory
-  * posture, applied to knobs). Scans the sources, so an option read
-  * only on a rarely-run path is still counted. */
+/** Locks the program's configuration surface, the exact `graft.*`
+  * conf keys and environment variables `src/main` reads, and the
+  * single home of the version-chain lifecycle. A new option fails the
+  * suite until the change adds it here, visibly, with the reason it
+  * cannot be a constant (the `PlanAuditSpec` inventory posture,
+  * applied to knobs); a second copy of the lifecycle fails it the same
+  * way. Scans the sources, so a read or call on a rarely-run path is
+  * still counted. */
 class OptionsInventorySpec extends AnyFunSuite {
 
   /** Every conf key the program reads, with what it is for. */
@@ -19,32 +21,36 @@ class OptionsInventorySpec extends AnyFunSuite {
     "graft.bpe.deepMergesExportDir" -> "deep BPE merge export root (engine and oracle glob)",
     "graft.bpe.driverVocabMax" -> "BPE trainer driver-tier vocabulary threshold",
     "graft.chain.autoCompactVersions" -> "version-chain auto-compaction trigger",
+    "graft.chain.compactMaxDirs" -> "version-chain dir-count compaction trigger",
     "graft.cluster.collectEdgesMax" -> "dedup component loop driver-tier edge threshold",
     "graft.cluster.iterDir" -> "iteration storage root (set by perfbench)",
-    "graft.curation.compactMaxDirs" -> "curation mapping compaction trigger",
     "graft.filtered.strategy" -> "filtered-search strategy override (exact|harvest|inwalk)",
     "graft.graph.collectEdgesMax" -> "graph family driver-tier edge threshold (test seam)",
     "graft.nav.broadcastVecsMax" -> "navigable-graph broadcast tier threshold",
-    "graft.nav.compactMaxDirs" -> "nav index compaction trigger",
     "graft.vacuum.objectStoreSweep" -> "opt-in orphan sweep on object stores",
     "graft.vacuum.orphanMinAgeMs" -> "orphan sweep minimum age")
 
   private val envVars = Set("SPARK_GRAFT_CPUS")
 
-  private def mainSources: Seq[String] = {
+  /** (path relative to the `graft` package dir, source) of every
+    * main source file. */
+  private def mainFiles: Seq[(String, String)] = {
     val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root), s"sources not found under $root")
+    val pkg = root.resolve("graft")
     val walk = Files.walk(root)
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      .map((p: Path) => Files.readString(p))
+      .map((p: Path) => pkg.relativize(p).toString.replace('\\', '/') -> Files.readString(p))
     finally walk.close()
   }
+
+  private def mainSources: Seq[String] = mainFiles.map(_._2)
 
   test("graft.* conf keys read by src/main match the inventory") {
     val key = "\"(graft\\.[A-Za-z0-9_.]+)\"".r
     val found = mainSources.flatMap(src => key.findAllMatchIn(src).map(_.group(1))).toSet
     assert(found === confKeys.keySet)
-    assert(found.size === 12)
+    assert(found.size === 11)
   }
 
   test("environment variables read by src/main match the inventory") {
@@ -56,5 +62,18 @@ class OptionsInventorySpec extends AnyFunSuite {
     // every env read names its variable literally, so the scan is complete
     assert(srcs.map(read.findAllMatchIn(_).size).sum ===
       srcs.map(named.findAllMatchIn(_).size).sum)
+  }
+
+  test("the version-chain lifecycle and the maintenance gate each have one home") {
+    val files = mainFiles.filterNot(_._1 == "io/BucketedTable.scala")
+    def callers(call: String): Set[String] =
+      files.filter(_._2.contains(call)).map(_._1).toSet
+    for (call <- Seq("BucketedTable.compact(", "isSelfContainedIfCommitted(",
+        "BucketedTable.referencedDirs(", "BucketedTable.sweepOrphans("))
+      assert(callers(call) === Set("io/VersionChain.scala"), call)
+    val gate = files.collect { case ("streaming/IndexStreams.scala", src) =>
+      "\\.foreachBatch".r.findAllMatchIn(src).size }
+    assert(gate === Seq(1))
+    assert(files.count(_._2.contains("vs.contains(batchId)")) === 1)
   }
 }

@@ -662,7 +662,7 @@ class PipelineSpec extends SparkSpec {
 
   test("exact mapping release chain auto-compacts past the dir-count ceiling") {
     // every release appends one directory per delta-touched content-
-    // hash bucket; past graft.curation.compactMaxDirs the tip rewrites
+    // hash bucket; past graft.chain.compactMaxDirs the tip rewrites
     // in place (pure I/O) so read fan-out stays bounded over a long
     // chain — rows identical before/after by construction
     import graft.pipelines.Curation
@@ -671,13 +671,13 @@ class PipelineSpec extends SparkSpec {
     val roots = (0 to 3).map(i =>
       Files.createTempDirectory(s"graft_excmp_v$i").toString)
     Curation.buildStateExactFirst(spark, vN, roots(0))
-    spark.conf.set("graft.curation.compactMaxDirs", "2")
+    spark.conf.set("graft.chain.compactMaxDirs", "2")
     try {
       for (i <- 1 to 3) {
         val delta = docs.where(col("doc_id") % 4 === i)
         Curation.incrementState(spark, delta, roots(i - 1), roots(i))
       }
-    } finally spark.conf.unset("graft.curation.compactMaxDirs")
+    } finally spark.conf.unset("graft.chain.compactMaxDirs")
     import graft.io.BucketedTable
     assert(BucketedTable.maxDirsPerBucket(spark, Curation.exactPath(roots(3))) <= 2,
       "the chain tip must have compacted past the ceiling")
@@ -702,14 +702,14 @@ class PipelineSpec extends SparkSpec {
       Curation.incrementState(spark, delta, vr(i - 1), vr(i))
       Curation.incrementWinnowIndex(spark, delta, vr(i - 1), vr(i))
     }
-    assert(Curation.committedReleases(spark, chain) === Seq(0L, 1L, 2L))
+    assert(Curation.committedVersions(spark, chain) === Seq(0L, 1L, 2L))
     // a freshly-incremented tip references ancestors — not an anchor,
     // so vacuum refuses (safety over reclamation)
-    assert(!Curation.isReleaseAnchor(spark, vr(2)))
+    assert(!Curation.isAnchor(spark, vr(2)))
     val wantDecision = Curation.decision(spark, vr(2)).collect().toSet
     val wantWinnow = Curation.winnowIndex(spark, vr(2)).collect().toSet
-    Curation.vacuumReleases(spark, chain, 1)
-    assert(Curation.committedReleases(spark, chain) === Seq(0L, 1L, 2L))
+    Curation.vacuum(spark, chain, 1)
+    assert(Curation.committedVersions(spark, chain) === Seq(0L, 1L, 2L))
     // crash-simulated partial compact: a generation no manifest
     // references, inside the RETAINED tip
     val orphan = new org.apache.hadoop.fs.Path(
@@ -721,12 +721,12 @@ class PipelineSpec extends SparkSpec {
     // compact anchors the tip; the same vacuum then reclaims v0/v1
     // whole AND sweeps the orphan generation inside v2 (horizon
     // dropped: this single-writer test just created the orphan)
-    Curation.compactReleases(spark, chain)
-    assert(Curation.isReleaseAnchor(spark, vr(2)))
+    Curation.compactTip(spark, chain)
+    assert(Curation.isAnchor(spark, vr(2)))
     spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
-    try Curation.vacuumReleases(spark, chain, 1)
+    try Curation.vacuum(spark, chain, 1)
     finally spark.conf.unset("graft.vacuum.orphanMinAgeMs")
-    assert(Curation.committedReleases(spark, chain) === Seq(2L))
+    assert(Curation.committedVersions(spark, chain) === Seq(2L))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${Curation.exactPath(vr(2))}/cdata7")))
     assert(Curation.decision(spark, vr(2)).collect().toSet === wantDecision)
     assert(Curation.winnowIndex(spark, vr(2)).collect().toSet === wantWinnow)
@@ -737,11 +737,11 @@ class PipelineSpec extends SparkSpec {
       .select((col("doc_id") + lit(5000000L)).as("doc_id"), col("text"),
         col("source"), col("lang"), col("n_chars"))
     Curation.incrementState(spark, extra, vr(2), vr(3))
-    Curation.compactReleases(spark, chain)
+    Curation.compactTip(spark, chain)
     spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
-    try Curation.vacuumReleases(spark, chain, 1)
+    try Curation.vacuum(spark, chain, 1)
     finally spark.conf.unset("graft.vacuum.orphanMinAgeMs")
-    assert(Curation.committedReleases(spark, chain) === Seq(2L, 3L),
+    assert(Curation.committedVersions(spark, chain) === Seq(2L, 3L),
       "a winnow-less tip must not let vacuum delete the winnow-bearing ancestor")
     assert(Curation.winnowIndex(spark, vr(2)).collect().toSet === wantWinnow)
   }
@@ -792,7 +792,7 @@ class PipelineSpec extends SparkSpec {
   test("ann release chain: compact anchors the tip, vacuum reclaims below and sweeps orphans") {
     // the round-15 gap: the ann chain had isAnchor + compactState but
     // no retention entry point — this is the curation/nav lifecycle
-    // applied to the third chain through the same ChainRetention rule
+    // applied to the third chain through the same VersionChain rule
     import graft.pipelines.AnnIndex
     val emb = Tables.embeddings(spark, sf)
     val chain = Files.createTempDirectory("graft_annvac").toString
@@ -836,44 +836,92 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("increment-only chain self-compacts past the version threshold, then reclaims") {
-    // the round-16 verdict ask #6: an operator who only ever
-    // increments never lands an anchor, so vacuum alone refuses
-    // forever and versions accumulate without bound. The shared
-    // ChainRetention trigger (graft.chain.autoCompactVersions) must
-    // compact the tip inside vacuum once the anchorless run is long
-    // enough — no explicit compactTip call anywhere in this test.
-    import graft.pipelines.AnnIndex
+    // an operator who only ever increments never lands an anchor, so
+    // vacuum alone refuses forever and versions accumulate without
+    // bound. The VersionChain trigger (graft.chain.autoCompactVersions)
+    // must compact the tip inside vacuum once the anchorless run is
+    // long enough, on every chain: no explicit compactTip call
+    // anywhere in this test.
+    import graft.io.VersionChain
+    import graft.pipelines.{AnnIndex, Curation, NavIndex, PqIndex}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
-    val chain = Files.createTempDirectory("graft_annauto").toString
-    def vr(b: Int) = s"$chain/v$b"
-    AnnIndex.buildState(spark, emb.where(col("label") < 6), vr(0))
-    for (i <- 1 to 3)
-      AnnIndex.incrementState(spark, emb.where(col("label") === 5 + i),
-        vr(i - 1), vr(i))
-    val want = AnnIndex.graph(spark, vr(3)).collect().toSeq
-    // below the threshold: vacuum refuses (v0 is the build anchor but
-    // the kept window holds only the anchorless tip) and does NOT
-    // auto-compact — 3 versions since the v0 anchor < threshold 4
-    spark.conf.set("graft.chain.autoCompactVersions", "4")
-    spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
-    try {
-      AnnIndex.vacuum(spark, chain, 1)
-      assert(AnnIndex.committedVersions(spark, chain) === Seq(0L, 1L, 2L, 3L))
-      assert(!AnnIndex.isAnchor(spark, vr(3)))
-      // one more increment crosses the threshold: the SAME vacuum call
-      // self-compacts the tip, then reclaims everything below it
-      AnnIndex.incrementState(spark, emb.where(col("label") === 9),
-        vr(3), vr(4))
-      val want4 = AnnIndex.graph(spark, vr(4)).collect().toSeq
-      AnnIndex.vacuum(spark, chain, 1)
-      assert(AnnIndex.committedVersions(spark, chain) === Seq(4L))
-      assert(AnnIndex.isAnchor(spark, vr(4)))
-      assert(AnnIndex.graph(spark, vr(4)).collect().toSeq === want4)
-    } finally {
-      spark.conf.unset("graft.chain.autoCompactVersions")
-      spark.conf.unset("graft.vacuum.orphanMinAgeMs")
+    val docs = Tables.documents(spark, sf)
+    // id-range slices: v0 holds ids below 300, increment i the next
+    // 50, so release ids stay monotone (no curation keeper demotion)
+    def slice(df: DataFrame, id: String, i: Int): DataFrame =
+      if (i == 0) df.where(col(id) < 300)
+      else df.where(col(id) >= 250 + 50 * i && col(id) < 300 + 50 * i)
+    // nav: two sign-separable regions, every delta in region A, so the
+    // increments stay localized and inside one seed-band width
+    def vecA(id: Long) = Array.tabulate(64)(i => 1.0 + 0.001 * ((id * 7 + i) % 5))
+    def vecB(id: Long) = Array.tabulate(64)(i =>
+      if (i % 2 == 0) 1.0 + 0.001 * ((id * 11 + i) % 5) else -1.0 - 0.001 * ((id * 3 + i) % 5))
+    def dfA(lo: Long, hi: Long) = (lo until hi).map(i => (i, vecA(i), 1L))
+      .toDF("vec_id", "embedding", "label")
+    val navBase = ((0L until 30L).map(i => (i, vecA(i), 1L)) ++
+      (100L until 280L).map(i => (i, vecB(i), 2L)))
+      .toDF("vec_id", "embedding", "label")
+    def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+    case class Script(name: String, chain: VersionChain, build: String => Unit,
+        increment: (Int, String, String) => Unit, rows: String => Seq[Row])
+    val scripts = Seq(
+      // LABEL-grain deltas: the "new content domain arrives" regime
+      // the ann bucket splice is built for
+      Script("ann", AnnIndex,
+        AnnIndex.buildState(spark, emb.where(col("label") < 6), _),
+        (i, p, n) => AnnIndex.incrementState(spark, emb.where(col("label") === 5 + i), p, n),
+        vr => AnnIndex.graph(spark, vr).collect().toSeq),
+      // incrementState directly: the streaming maintainer's frontier
+      // routing could land an anchor early
+      Script("nav", NavIndex,
+        NavIndex.buildState(spark, navBase, _),
+        (i, p, n) => NavIndex.incrementState(spark, dfA(20 + 10 * i, 30 + 10 * i), p, n),
+        vr => sorted(NavIndex.graph(spark, vr))),
+      Script("pq", PqIndex,
+        PqIndex.buildState(spark, slice(emb, "vec_id", 0), _),
+        (i, p, n) => PqIndex.incrementState(spark, slice(emb, "vec_id", i), p, n),
+        vr => sorted(PqIndex.codes(spark, vr))),
+      Script("curation", Curation,
+        vr => {
+          Curation.buildStateExactFirst(spark, slice(docs, "doc_id", 0), vr)
+          Curation.buildWinnowIndex(spark, slice(docs, "doc_id", 0), vr)
+        },
+        (i, p, n) => {
+          Curation.incrementState(spark, slice(docs, "doc_id", i), p, n)
+          Curation.incrementWinnowIndex(spark, slice(docs, "doc_id", i), p, n)
+        },
+        vr => sorted(Curation.decision(spark, vr)) ++ sorted(Curation.winnowIndex(spark, vr))))
+    for (sc <- scripts) withClue(s"${sc.name} chain: ") {
+      val chain = Files.createTempDirectory(s"graft_auto_${sc.name}").toString
+      def vr(b: Int) = s"$chain/v$b"
+      sc.build(vr(0))
+      for (i <- 1 to 3) sc.increment(i, vr(i - 1), vr(i))
+      val want = sc.rows(vr(3))
+      // below the threshold: vacuum refuses (v0 is the build anchor but
+      // the kept window holds only the anchorless tip) and does NOT
+      // auto-compact — 3 versions since the v0 anchor < threshold 4
+      spark.conf.set("graft.chain.autoCompactVersions", "4")
+      spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
+      try {
+        sc.chain.vacuum(spark, chain, 1)
+        assert(sc.chain.committedVersions(spark, chain) === Seq(0L, 1L, 2L, 3L))
+        assert(!sc.chain.isAnchor(spark, vr(3)))
+        // one more increment crosses the threshold: the SAME vacuum call
+        // self-compacts the tip, then reclaims everything below it
+        sc.increment(4, vr(3), vr(4))
+        val want4 = sc.rows(vr(4))
+        sc.chain.vacuum(spark, chain, 1)
+        assert(sc.chain.committedVersions(spark, chain) === Seq(4L))
+        assert(sc.chain.isAnchor(spark, vr(4)))
+        assert(sc.rows(vr(4)) === want4)
+      } finally {
+        spark.conf.unset("graft.chain.autoCompactVersions")
+        spark.conf.unset("graft.vacuum.orphanMinAgeMs")
+      }
+      assert(want.nonEmpty) // the pre-reclaim reference really had rows
     }
-    assert(want.nonEmpty) // the pre-reclaim reference really had rows
   }
 
   test("warm rebuild REPLACES re-submitted vec_ids (re-embedding sweep)") {

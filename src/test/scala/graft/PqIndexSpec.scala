@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 import graft.pipelines.PqIndex
-import graft.streaming.PqStreams
+import graft.streaming.IndexStreams
 
 /** The incrementally-maintained PQ chain: frozen-codebook increment
   * exactness, replace semantics, drift routing, crash-replay, the
@@ -87,10 +87,10 @@ class PqIndexSpec extends SparkSpec {
   test("maintainer routes by recon-error drift and no-ops on replay") {
     val chain = Files.createTempDirectory("graft_pqroute").toString
     val b0 = emb.where(col("vec_id") < 300)
-    assert(PqStreams.maintainBatch(spark, b0, chain, 0L) === "build")
+    assert(IndexStreams.maintainBatch(PqIndex, spark, b0, chain, 0L) === "build")
     // in-distribution delta: well under the 1.5× baseline → increment
     val b1 = emb.where(col("vec_id") >= 300 && col("vec_id") < 400)
-    assert(PqStreams.maintainBatch(spark, b1, chain, 1L) === "increment")
+    assert(IndexStreams.maintainBatch(PqIndex, spark, b1, chain, 1L) === "increment")
     // distribution shift (vectors scaled ×10): recon error explodes
     // past the frozen centroids → rebuild, landing an anchor and a
     // fresh baseline
@@ -98,7 +98,7 @@ class PqIndexSpec extends SparkSpec {
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(10 * x as float))").as("embedding"),
         col("label"))
-    assert(PqStreams.maintainBatch(spark, b2, chain, 2L) === "rebuild(err)")
+    assert(IndexStreams.maintainBatch(PqIndex, spark, b2, chain, 2L) === "rebuild(err)")
     assert(PqIndex.isAnchor(spark, s"$chain/v2"))
     val base1 = PqIndex.stats(spark, s"$chain/v1").collect()(0).getAs[Double]("base_err")
     val base2 = PqIndex.stats(spark, s"$chain/v2").collect()(0).getAs[Double]("base_err")
@@ -106,7 +106,7 @@ class PqIndexSpec extends SparkSpec {
     // replay of a landed batch is a no-op — the version is
     // authoritative even though v1's prior could have been vacuumed
     val want = PqIndex.codes(spark, s"$chain/v2").count()
-    assert(PqStreams.maintainBatch(spark, b1, chain, 1L) === "replay(noop)")
+    assert(IndexStreams.maintainBatch(PqIndex, spark, b1, chain, 1L) === "replay(noop)")
     assert(PqIndex.codes(spark, s"$chain/v2").count() === want)
   }
 
@@ -122,7 +122,7 @@ class PqIndexSpec extends SparkSpec {
         .schema(spark.read.parquet(s"$sf/embeddings.parquet").schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$d/*")
-      val q = PqStreams.pqMaintainGate(spark, stream, root, ckpt)
+      val q = IndexStreams.maintainGate(PqIndex, spark, stream, root, ckpt)
       try q.processAllAvailable()
       finally {
         q.stop(); q.awaitTermination()
@@ -137,7 +137,7 @@ class PqIndexSpec extends SparkSpec {
     val want = graft.ops.Similarity.pqEncodePacked(
         graft.ops.Similarity.pqExplodeOf(emb, PqIndex.SubDim), cb0)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    def tipCodes() = PqStreams.currentCodes(spark, root)
+    def tipCodes() = PqIndex.codes(spark, PqIndex.tip(spark, root))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(tipCodes() === want)
     // crash-replay: lose the last batch's checkpoint commit; the

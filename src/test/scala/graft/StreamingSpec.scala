@@ -394,7 +394,7 @@ class StreamingSpec extends SparkSpec {
         .schema(spark.read.parquet(s"$sf/embeddings.parquet").schema)
         .option("maxFilesPerTrigger", 1) // one drop per micro-batch
         .parquet(s"$d/*")
-      val q = IndexStreams.navMaintainGate(spark, stream, root, ckpt)
+      val q = IndexStreams.maintainGate(NavIndex, spark, stream, root, ckpt)
       try q.processAllAvailable()
       finally {
         q.stop(); q.awaitTermination()
@@ -403,12 +403,12 @@ class StreamingSpec extends SparkSpec {
     }
     run()
     // three drops -> three committed versions (full build + 2 deltas)
-    assert(IndexStreams.committedVersions(spark, root).size === 3)
+    assert(NavIndex.committedVersions(spark, root).size === 3)
     // batch parity: the maintained graph IS the one-shot build's graph
     val fullRoot = java.nio.file.Files.createTempDirectory("graft_idxm_full").toString
     NavIndex.buildState(spark, emb, fullRoot)
     val full = NavIndex.graph(spark, fullRoot)
-    val cur = IndexStreams.currentGraph(spark, root)
+    val cur = NavIndex.graph(spark, NavIndex.tip(spark, root))
     assert(cur.count() === full.count())
     assert(cur.exceptAll(full).count() === 0)
     assert(full.exceptAll(cur).count() === 0)
@@ -421,8 +421,8 @@ class StreamingSpec extends SparkSpec {
     assert(last.delete())
     new java.io.File(commits, s".${last.getName}.crc").delete()
     run()
-    assert(IndexStreams.committedVersions(spark, root).size === 3)
-    val cur2 = IndexStreams.currentGraph(spark, root)
+    assert(NavIndex.committedVersions(spark, root).size === 3)
+    val cur2 = NavIndex.graph(spark, NavIndex.tip(spark, root))
     assert(cur2.exceptAll(full).count() === 0)
     assert(full.exceptAll(cur2).count() === 0)
   }
@@ -441,31 +441,31 @@ class StreamingSpec extends SparkSpec {
       (100L until 280L).map(i => (i, vecB(i), 2L)))
       .toDF("vec_id", "embedding", "label")
     val root = java.nio.file.Files.createTempDirectory("graft_route_idx").toString
-    assert(IndexStreams.maintainBatch(spark, base, root, 0L) === "build")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, base, root, 0L) === "build")
     // LOCALIZED delta — only region A's buckets touched, estimated
     // frontier (30+10)/220 ≈ 0.18, well under the 0.5 threshold
     val local = (30L until 40L).map(i => (i, vecA(i), 1L))
       .toDF("vec_id", "embedding", "label")
-    assert(IndexStreams.maintainBatch(spark, local, root, 1L) === "increment")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, local, root, 1L) === "increment")
     // UNIFORM delta — both regions touched, estimated frontier ≈ 1.0:
     // its true frontier is the corpus, so the gate takes the rebuild
     val uniform = ((40L until 45L).map(i => (i, vecA(i), 1L)) ++
       (280L until 285L).map(i => (i, vecB(i), 2L)))
       .toDF("vec_id", "embedding", "label")
-    assert(IndexStreams.maintainBatch(spark, uniform, root, 2L) === "rebuild(frontier)")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, uniform, root, 2L) === "rebuild(frontier)")
     // routing is a cost decision, never a content one: the sequence
     // lands on the one-shot build's graph bit-for-bit
     val ref = java.nio.file.Files.createTempDirectory("graft_route_ref").toString
     NavIndex.buildState(spark,
       base.unionByName(local).unionByName(uniform), ref)
-    val got = IndexStreams.currentGraph(spark, root)
+    val got = NavIndex.graph(spark, NavIndex.tip(spark, root))
     val want = NavIndex.graph(spark, ref)
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
   }
 
   test("streaming ANN maintenance equals the one-shot build and replays idempotently") {
-    import graft.streaming.AnnStreams
+    import graft.streaming.IndexStreams
     import graft.pipelines.AnnIndex
     // LABEL-grain drops (the ann chain's touch grain): bulk corpus,
     // then two single-label domain arrivals
@@ -481,7 +481,7 @@ class StreamingSpec extends SparkSpec {
         .schema(spark.read.parquet(s"$sf/embeddings.parquet").schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$d/*")
-      val q = AnnStreams.annMaintainGate(spark, stream, root, ckpt)
+      val q = IndexStreams.maintainGate(AnnIndex, spark, stream, root, ckpt)
       try q.processAllAvailable()
       finally {
         q.stop(); q.awaitTermination()
@@ -494,7 +494,7 @@ class StreamingSpec extends SparkSpec {
     val fullRoot = java.nio.file.Files.createTempDirectory("graft_annm_full").toString
     AnnIndex.buildState(spark, emb, fullRoot)
     val full = AnnIndex.graph(spark, fullRoot)
-    val cur = AnnStreams.currentGraph(spark, root)
+    val cur = AnnIndex.graph(spark, AnnIndex.tip(spark, root))
     assert(cur.count() === full.count())
     assert(cur.exceptAll(full).count() === 0)
     assert(full.exceptAll(cur).count() === 0)
@@ -507,13 +507,13 @@ class StreamingSpec extends SparkSpec {
     new java.io.File(commits, s".${last.getName}.crc").delete()
     run()
     assert(AnnIndex.committedVersions(spark, root).size === 3)
-    val cur2 = AnnStreams.currentGraph(spark, root)
+    val cur2 = AnnIndex.graph(spark, AnnIndex.tip(spark, root))
     assert(cur2.exceptAll(full).count() === 0)
     assert(full.exceptAll(cur2).count() === 0)
   }
 
   test("ANN maintenance gate routes label-uniform deltas to the warm rebuild") {
-    import graft.streaming.AnnStreams
+    import graft.streaming.IndexStreams
     import graft.pipelines.AnnIndex
     import spark.implicits._
     def vec(id: Long) = Array.tabulate(64)(i => 0.1 + 0.001 * ((id * 7 + i) % 5))
@@ -521,27 +521,27 @@ class StreamingSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val base = df((0L until 60L).map(i => (i, 1L + i % 2))) // labels 1, 2
     val root = java.nio.file.Files.createTempDirectory("graft_annroute").toString
-    assert(AnnStreams.maintainBatch(spark, base, root, 0L) === "build")
+    assert(IndexStreams.maintainBatch(AnnIndex, spark, base, root, 0L) === "build")
     // one NEW label = 1/2 of the prior label count — at, not over,
     // the 0.5 threshold: increments (the localized domain arrival)
     val local = df((100L until 110L).map(i => (i, 3L)))
-    assert(AnnStreams.maintainBatch(spark, local, root, 1L) === "increment")
+    assert(IndexStreams.maintainBatch(AnnIndex, spark, local, root, 1L) === "increment")
     // a delta touching every prior label (3/3 > 0.5) routes to the
     // warm rebuild — its touched set IS the corpus
     val uniform = df(Seq((200L, 1L), (201L, 2L), (202L, 3L)))
-    assert(AnnStreams.maintainBatch(spark, uniform, root, 2L) === "rebuild(labels)")
+    assert(IndexStreams.maintainBatch(AnnIndex, spark, uniform, root, 2L) === "rebuild(labels)")
     // routing is a cost decision, never a content one
     val ref = java.nio.file.Files.createTempDirectory("graft_annroute_ref").toString
     AnnIndex.buildState(spark,
       base.unionByName(local).unionByName(uniform), ref)
-    val got = AnnStreams.currentGraph(spark, root)
+    val got = AnnIndex.graph(spark, AnnIndex.tip(spark, root))
     val want = AnnIndex.graph(spark, ref)
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
     // the rebuild landed an ANCHOR: vacuum can retire everything below
     AnnIndex.vacuum(spark, root, 1)
     assert(AnnIndex.committedVersions(spark, root) === Seq(2L))
-    val after = AnnStreams.currentGraph(spark, root)
+    val after = AnnIndex.graph(spark, AnnIndex.tip(spark, root))
     assert(after.exceptAll(want).count() === 0)
   }
 
@@ -552,7 +552,7 @@ class StreamingSpec extends SparkSpec {
     // None branch full-built v<N> from the delta alone — the prior
     // corpus silently vanished from the index. The guard: a batch
     // whose own version is committed no-ops.
-    import graft.streaming.AnnStreams
+    import graft.streaming.IndexStreams
     import graft.pipelines.AnnIndex
     import spark.implicits._
     def dfL(ids: Range, lab: Long => Long) = ids
@@ -569,31 +569,31 @@ class StreamingSpec extends SparkSpec {
         Array.tabulate(64)(j => if (j % 2 == 0) 1.0 + 0.001 * ((i * 11 + j) % 5)
           else -1.0 - 0.001 * ((i * 3 + j) % 5)), 4L))
       .toDF("vec_id", "embedding", "label")
-    assert(AnnStreams.maintainBatch(spark, b0, root, 0L) === "build")
-    assert(AnnStreams.maintainBatch(spark, b1, root, 1L) === "increment")
-    val want = AnnStreams.currentGraph(spark, root).collect().toSeq
+    assert(IndexStreams.maintainBatch(AnnIndex, spark, b0, root, 0L) === "build")
+    assert(IndexStreams.maintainBatch(AnnIndex, spark, b1, root, 1L) === "increment")
+    val want = AnnIndex.graph(spark, AnnIndex.tip(spark, root)).collect().toSeq
     // scheduled maintenance fires before batch 1's commit is durable
-    AnnStreams.compact(spark, root)
+    AnnIndex.compactTip(spark, root)
     spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
-    try AnnStreams.vacuum(spark, root, 1)
+    try AnnIndex.vacuum(spark, root, 1)
     finally spark.conf.unset("graft.vacuum.orphanMinAgeMs")
     assert(AnnIndex.committedVersions(spark, root) === Seq(1L))
     // the checkpoint replays batch 1: its version is committed → no-op,
     // and the whole corpus (b0 ∪ b1) stays in the index
-    assert(AnnStreams.maintainBatch(spark, b1, root, 1L) === "replay(noop)")
-    assert(AnnStreams.currentGraph(spark, root).collect().toSeq === want)
+    assert(IndexStreams.maintainBatch(AnnIndex, spark, b1, root, 1L) === "replay(noop)")
+    assert(AnnIndex.graph(spark, AnnIndex.tip(spark, root)).collect().toSeq === want)
     // the nav chain shares the guard
-    import graft.streaming.IndexStreams
+    import graft.pipelines.NavIndex
     val nroot = java.nio.file.Files.createTempDirectory("graft_replayvac_nav").toString
-    assert(IndexStreams.maintainBatch(spark, b0, nroot, 0L) === "build")
-    assert(IndexStreams.maintainBatch(spark, b1, nroot, 1L) === "increment")
-    val wantNav = IndexStreams.currentGraph(spark, nroot).collect().toSeq
-    IndexStreams.compact(spark, nroot)
+    assert(IndexStreams.maintainBatch(NavIndex, spark, b0, nroot, 0L) === "build")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, b1, nroot, 1L) === "increment")
+    val wantNav = NavIndex.graph(spark, NavIndex.tip(spark, nroot)).collect().toSeq
+    NavIndex.compactTip(spark, nroot)
     spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
-    try IndexStreams.vacuum(spark, nroot, 1)
+    try NavIndex.vacuum(spark, nroot, 1)
     finally spark.conf.unset("graft.vacuum.orphanMinAgeMs")
-    assert(IndexStreams.maintainBatch(spark, b1, nroot, 1L) === "replay(noop)")
-    assert(IndexStreams.currentGraph(spark, nroot).collect().toSeq === wantNav)
+    assert(IndexStreams.maintainBatch(NavIndex, spark, b1, nroot, 1L) === "replay(noop)")
+    assert(NavIndex.graph(spark, NavIndex.tip(spark, nroot)).collect().toSeq === wantNav)
   }
 
   test("index vacuum reclaims only below the newest retained chain anchor") {
@@ -612,29 +612,29 @@ class StreamingSpec extends SparkSpec {
       (280L until 285L).map(i => (i, vecB(i), 2L)))
       .toDF("vec_id", "embedding", "label")
     val root = java.nio.file.Files.createTempDirectory("graft_vac_idx").toString
-    assert(IndexStreams.maintainBatch(spark, base, root, 0L) === "build")            // anchor
-    assert(IndexStreams.maintainBatch(spark, dfA(30, 40), root, 1L) === "increment") // refs v0
-    assert(IndexStreams.maintainBatch(spark, uniform, root, 2L) === "rebuild(frontier)") // anchor
-    assert(IndexStreams.maintainBatch(spark, dfA(45, 55), root, 3L) === "increment") // refs v2
+    assert(IndexStreams.maintainBatch(NavIndex, spark, base, root, 0L) === "build")            // anchor
+    assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(30, 40), root, 1L) === "increment") // refs v0
+    assert(IndexStreams.maintainBatch(NavIndex, spark, uniform, root, 2L) === "rebuild(frontier)") // anchor
+    assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(45, 55), root, 3L) === "increment") // refs v2
     // keep 2 -> oldest kept v2 is an anchor -> v0, v1 reclaim
-    IndexStreams.vacuum(spark, root, 2)
-    assert(IndexStreams.committedVersions(spark, root) === Seq(2L, 3L))
+    NavIndex.vacuum(spark, root, 2)
+    assert(NavIndex.committedVersions(spark, root) === Seq(2L, 3L))
     // the kept increment still resolves after the reclaim, and its
     // graph equals a one-shot build over everything it absorbed
     val ref = java.nio.file.Files.createTempDirectory("graft_vac_ref").toString
     NavIndex.buildState(spark,
       base.unionByName(dfA(30, 40)).unionByName(uniform).unionByName(dfA(45, 55)), ref)
-    val got = IndexStreams.currentGraph(spark, root)
+    val got = NavIndex.graph(spark, NavIndex.tip(spark, root))
     val want = NavIndex.graph(spark, ref)
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
     // grow the chain with increments only; a kept window of increments
     // must NOT reclaim the anchor they resolve through (safety wins)
-    assert(IndexStreams.maintainBatch(spark, dfA(55, 65), root, 4L) === "increment")
-    assert(IndexStreams.maintainBatch(spark, dfA(65, 75), root, 5L) === "increment")
-    IndexStreams.vacuum(spark, root, 2)
-    assert(IndexStreams.committedVersions(spark, root) === Seq(2L, 3L, 4L, 5L))
-    assert(IndexStreams.currentGraph(spark, root).count() > 0)
+    assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(55, 65), root, 4L) === "increment")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(65, 75), root, 5L) === "increment")
+    NavIndex.vacuum(spark, root, 2)
+    assert(NavIndex.committedVersions(spark, root) === Seq(2L, 3L, 4L, 5L))
+    assert(NavIndex.graph(spark, NavIndex.tip(spark, root)).count() > 0)
     // a version missing a state table (pre-band-state layout, torn
     // landing) is NOT-an-anchor, never an error: vacuum scans every
     // retained version through isAnchor, and an upgraded chain must
@@ -643,8 +643,8 @@ class StreamingSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/v2/nav_bstats/_parts"), false)
     assert(!NavIndex.isAnchor(spark, s"$root/v2"))
-    IndexStreams.vacuum(spark, root, 2) // must not throw; v3 is no anchor either
-    assert(IndexStreams.committedVersions(spark, root) === Seq(2L, 3L, 4L, 5L))
+    NavIndex.vacuum(spark, root, 2) // must not throw; v3 is no anchor either
+    assert(NavIndex.committedVersions(spark, root) === Seq(2L, 3L, 4L, 5L))
   }
 
   test("searchGate replays a micro-batch idempotently after a lost commit") {
@@ -910,49 +910,49 @@ class StreamingSpec extends SparkSpec {
     // a purely-localized stream: every batch takes the increment path,
     // so the chain never lands an anchor on its own and the vector
     // table's hot buckets accumulate one appended directory per batch
-    assert(IndexStreams.maintainBatch(spark, base, root, 0L) === "build")
-    assert(IndexStreams.maintainBatch(spark, dfA(30, 40), root, 1L) === "increment")
-    assert(IndexStreams.maintainBatch(spark, dfA(40, 50), root, 2L) === "increment")
-    assert(IndexStreams.maintainBatch(spark, dfA(50, 60), root, 3L) === "increment")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, base, root, 0L) === "build")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(30, 40), root, 1L) === "increment")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(40, 50), root, 2L) === "increment")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(50, 60), root, 3L) === "increment")
     val tip = s"$root/v3"
     assert(!NavIndex.isAnchor(spark, tip))
     assert(NavIndex.maxDirsPerBucket(spark, tip) > 1)
     // increments only -> no anchor in the kept window -> vacuum
     // refuses (safety over reclamation), the round-13 contract
-    IndexStreams.vacuum(spark, root, 1)
-    assert(IndexStreams.committedVersions(spark, root) === Seq(0L, 1L, 2L, 3L))
+    NavIndex.vacuum(spark, root, 1)
+    assert(NavIndex.committedVersions(spark, root) === Seq(0L, 1L, 2L, 3L))
     // compaction is pure I/O: self-contained tip, ~1 dir/bucket,
     // graph row-identical to the one-shot build over all absorbed
-    IndexStreams.compact(spark, root)
+    NavIndex.compactTip(spark, root)
     assert(NavIndex.isAnchor(spark, tip))
     assert(NavIndex.maxDirsPerBucket(spark, tip) === 1)
     val ref = java.nio.file.Files.createTempDirectory("graft_compact_ref").toString
     NavIndex.buildState(spark, base.unionByName(dfA(30, 60)), ref)
     val want = NavIndex.graph(spark, ref)
-    val got = IndexStreams.currentGraph(spark, root)
+    val got = NavIndex.graph(spark, NavIndex.tip(spark, root))
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
     // the compacted tip is an anchor, so the SAME vacuum now reclaims
     // the whole pre-compact chain, and the tip still resolves
-    IndexStreams.vacuum(spark, root, 1)
-    assert(IndexStreams.committedVersions(spark, root) === Seq(3L))
-    val got2 = IndexStreams.currentGraph(spark, root)
+    NavIndex.vacuum(spark, root, 1)
+    assert(NavIndex.committedVersions(spark, root) === Seq(3L))
+    val got2 = NavIndex.graph(spark, NavIndex.tip(spark, root))
     assert(got2.exceptAll(want).count() === 0)
     assert(want.exceptAll(got2).count() === 0)
     // routed form: past the dir-count threshold maintainBatch compacts
     // the version it just landed, which anchors it immediately
-    spark.conf.set("graft.nav.compactMaxDirs", "1")
+    spark.conf.set("graft.chain.compactMaxDirs", "1")
     try {
-      assert(IndexStreams.maintainBatch(spark, dfA(60, 70), root, 4L) === "increment+compact")
+      assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(60, 70), root, 4L) === "increment+compact")
       assert(NavIndex.isAnchor(spark, s"$root/v4"))
       assert(NavIndex.maxDirsPerBucket(spark, s"$root/v4") === 1)
       val ref2 = java.nio.file.Files.createTempDirectory("graft_compact_ref2").toString
       NavIndex.buildState(spark, base.unionByName(dfA(30, 70)), ref2)
       val want2 = NavIndex.graph(spark, ref2)
-      val got3 = IndexStreams.currentGraph(spark, root)
+      val got3 = NavIndex.graph(spark, NavIndex.tip(spark, root))
       assert(got3.exceptAll(want2).count() === 0)
       assert(want2.exceptAll(got3).count() === 0)
-    } finally spark.conf.unset("graft.nav.compactMaxDirs")
+    } finally spark.conf.unset("graft.chain.compactMaxDirs")
   }
 
   test("vacuum sweeps crashed-compact orphans inside retained versions") {
@@ -968,8 +968,8 @@ class StreamingSpec extends SparkSpec {
       (100L until 280L).map(i => (i, vecB(i), 2L)))
       .toDF("vec_id", "embedding", "label")
     val root = java.nio.file.Files.createTempDirectory("graft_sweep_idx").toString
-    assert(IndexStreams.maintainBatch(spark, base, root, 0L) === "build")
-    assert(IndexStreams.maintainBatch(spark, dfA(30, 40), root, 1L) === "increment")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, base, root, 0L) === "build")
+    assert(IndexStreams.maintainBatch(NavIndex, spark, dfA(30, 40), root, 1L) === "increment")
     val tipVecs = NavIndex.vecsPath(s"$root/v1")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1000,17 +1000,17 @@ class StreamingSpec extends SparkSpec {
     // under the DEFAULT horizon the freshly-written dirs look like a
     // concurrent maintainer's in-flight write — the fence must keep
     // the sweep's hands off them
-    IndexStreams.vacuum(spark, root, 2)
+    NavIndex.vacuum(spark, root, 2)
     assert(fs.exists(orphanGen) && fs.exists(orphanStale),
       "young orphans must survive the default concurrent-maintenance horizon")
     // the sweep's concurrent-maintenance fence skips young orphans;
     // this single-writer test just created them, so drop the horizon
     spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
-    try IndexStreams.vacuum(spark, root, 2)
+    try NavIndex.vacuum(spark, root, 2)
     finally spark.conf.unset("graft.vacuum.orphanMinAgeMs")
     // both retained versions survive; orphans are gone, the emptied
     // cdata1 generation slot is freed whole
-    assert(IndexStreams.committedVersions(spark, root) === Seq(0L, 1L))
+    assert(NavIndex.committedVersions(spark, root) === Seq(0L, 1L))
     assert(!fs.exists(orphanGen))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tipVecs/cdata1")))
     assert(!fs.exists(orphanStale))
@@ -1018,7 +1018,7 @@ class StreamingSpec extends SparkSpec {
     liveDirs.foreach(d => assert(fs.exists(new org.apache.hadoop.fs.Path(d))))
     assert(NavIndex.readVecs(spark, s"$root/v1").collect().toSet === before)
     // a later real compact reuses the swept cdata1 slot and anchors
-    IndexStreams.compact(spark, root)
+    NavIndex.compactTip(spark, root)
     assert(NavIndex.isAnchor(spark, s"$root/v1"))
     assert(NavIndex.readVecs(spark, s"$root/v1").collect().toSet === before)
   }
