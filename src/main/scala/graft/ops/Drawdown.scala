@@ -150,10 +150,8 @@ object Drawdown {
     * Output: name, max_drawdown, peak_date, valley_date, duration. */
   def drawdownBySegmentQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val wName = Window.partitionBy("name").orderBy("date")
     val series = TimeSeries.dailyOrderRevenueBySegment(spark, dir)
-      .withColumn("pct",
-        (col("tvl") - lag(col("tvl"), 1).over(wName)) / lag(col("tvl"), 1).over(wName))
+      .withColumn("pct", TimeSeries.pctChange(col("tvl"), Window.partitionBy("name").orderBy("date")))
       .where(col("pct").isNotNull)
       .select("name", "date", "pct")
     maxDrawdownByKey(series, partitions = 8)
@@ -174,10 +172,8 @@ object Drawdown {
     * counts). Output: max_drawdown, peak_date, valley_date, duration. */
   def drawdownQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val wDate = Window.orderBy("date")
     val series = TimeSeries.dailyOrderRevenue(spark, dir)
-      .withColumn("pct",
-        (col("tvl") - lag(col("tvl"), 1).over(wDate)) / lag(col("tvl"), 1).over(wDate))
+      .withColumn("pct", TimeSeries.pctChange(col("tvl")))
       .where(col("pct").isNotNull)
       .select("date", "pct")
     val r = maxDrawdown(series, partitions = 8)

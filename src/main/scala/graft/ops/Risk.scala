@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,12 +24,16 @@ import org.apache.spark.sql.functions._
   * Only the stored column falls back — Sharpe keeps the separately
   * computed annual return, as in the reference (`:454-456`).
   *
-  * Scale notes: the trailing-window series is O(365) rows after the
-  * daily rollup, so the scalar-aggregate cross-joins below are all
-  * broadcast 1-row joins; nothing here shuffles more than the initial
-  * rollup. Drawdown's running max is a sequential window over the
-  * bounded daily series — deterministic, hence the exact double
-  * equality used to locate peak/valley is engine-portable.
+  * Scale notes: every operator here is one grouped aggregate over the
+  * `trailingYear` frame, which is O(365) rows per series after the
+  * daily rollup. That frame is one sort per series (partitioned by the
+  * series key; one bounded partition for a single series) with the
+  * O(#days) benchmark broadcast into it and every per-series constant
+  * a whole-partition window, so nothing shuffles more than the initial
+  * rollup and no scalar is joined back. Drawdown's running max is a
+  * sequential window over the bounded daily series — deterministic,
+  * hence the exact double equality used to locate peak/valley is
+  * engine-portable.
   */
 object Risk {
 
@@ -41,47 +45,15 @@ object Risk {
       TimeSeries.dailyOrderRevenue(spark, dir),
       TimeSeries.dailyBenchmark(spark, dir))
 
-  /** Multi-series risk: `risk` with every window, aggregate, and
-    * scalar carrier keyed by the series name — the reference's
-    * per-strategy topology (`aave_transform.py:627-657` wires one
-    * transform chain per strategy) as ONE partitioned plan. Each
-    * series gets its own as-of date, trailing window, ytd fallback,
-    * and drawdown; the per-series scalars (as-of, ytd, drawdown) are
-    * O(#series)-row tables joined back on `name` (the broadcast
-    * analogue of the single-series 1-row cross-joins), and the shared
-    * benchmark series is O(#days) and broadcast. 1000 strategies is
-    * the same plan with more window partitions — no extra stages, no
-    * driver loop. Output: one row per name. */
+  /** Multi-series risk: `risk` keyed by the series name — the
+    * reference's per-strategy topology (`aave_transform.py:627-657`
+    * wires one transform chain per strategy) as ONE partitioned plan.
+    * Each series gets its own as-of date, trailing window, ytd
+    * fallback and drawdown from the windows of `trailingYear`, and the
+    * shared benchmark series is O(#days) and broadcast. 1000 strategies
+    * is the same plan with more window partitions — no extra stages,
+    * no driver loop. Output: one row per name. */
   def riskBySegment(spark: SparkSession, dir: String): DataFrame = {
-    val wName = Window.partitionBy("name").orderBy("date")
-    val strat = TimeSeries.dailyOrderRevenueBySegment(spark, dir)
-      .withColumn("s_pct",
-        (col("tvl") - lag(col("tvl"), 1).over(wName)) / lag(col("tvl"), 1).over(wName))
-      .select("name", "date", "s_pct")
-    val wDate = Window.orderBy("date")
-    val bench = TimeSeries.dailyBenchmark(spark, dir)
-      .withColumn("b_pct",
-        (col("bench") - lag(col("bench"), 1).over(wDate)) / lag(col("bench"), 1).over(wDate))
-      .select("date", "b_pct")
-
-    // materialize before the fan-out (repo idiom): strat feeds asOf,
-    // ytd, and the bench join; joined feeds stats and the drawdown
-    // windows — without the caches each consumer re-runs the rollup +
-    // window subtree (three orders scans in the physical plan)
-    strat.persist().count()
-    val asOf = strat.groupBy("name")
-      .agg(max(col("date")).as("ds"), add_months(max(col("date")), -12).as("start"))
-    val joined = strat.join(broadcast(bench), Seq("date"))
-      .join(broadcast(asOf), Seq("name"))
-      .where(col("date") > col("start") && col("date") <= col("ds"))
-      .where(col("s_pct").isNotNull && col("b_pct").isNotNull)
-    joined.persist().count()
-
-    val ytd = strat.join(broadcast(asOf), Seq("name"))
-      .where(col("date") > date_trunc("year", col("ds")).cast("date") && col("date") <= col("ds"))
-      .groupBy("name")
-      .agg(round(exp(sum(log(lit(1.0) + coalesce(col("s_pct"), lit(0.0))))) - lit(1.0), 6).as("ytd"))
-
     // Deliberate deviation from the single-series formulas, forced by
     // magnitude: a per-segment daily series is ~5x sparser, so its
     // day-over-day swings are large and the reference's
@@ -94,40 +66,15 @@ object Risk {
     // (exp(sum(ln(1+pct))) - 1 — the identical construction the
     // trailing-return operator hash-matches with), and sharpe as the
     // standard mean-based annualization avg/sd * sqrt(365).
-    val stats = joined.groupBy(col("name"), col("ds")).agg(
-      round(stddev_samp(col("s_pct")) * sqrt(lit(365.0)), 6).as("sd"),
-      round(exp(sum(log(lit(1.0) + col("s_pct")))) - lit(1.0), 6).as("return_1y_raw"),
-      round(avg(col("s_pct")) / stddev_samp(col("s_pct")) * sqrt(lit(365.0)), 6).as("sharpe"),
-      round(regr_intercept(col("s_pct"), col("b_pct")), 6).as("alpha"),
-      round(regr_slope(col("s_pct"), col("b_pct")), 6).as("beta"),
-      round(regr_r2(col("s_pct"), col("b_pct")), 6).as("r_square"))
-
-    val wCum = wName.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy("name")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val dd = joined
-      .withColumn("cum", sum(col("s_pct")).over(wCum))
-      .withColumn("cummax", max(col("cum")).over(wCum))
-      .withColumn("dd", col("cum") - col("cummax"))
-      .withColumn("min_dd", min(col("dd")).over(wAll))
-      .withColumn("valley_date", min(when(col("dd") === col("min_dd"), col("date"))).over(wAll))
-      .withColumn("peak_cum", min(when(col("dd") === col("min_dd"), col("cummax"))).over(wAll))
-      .withColumn("peak_date",
-        min(when(col("date") <= col("valley_date") && col("cum") === col("peak_cum"), col("date"))).over(wAll))
-
-    val drawdown = dd.groupBy(col("name"), col("valley_date"), col("peak_date")).agg(
-      round(min(col("min_dd")), 6).as("max_drawdown"))
-
-    stats
-      .join(drawdown, Seq("name"))
-      .join(ytd, Seq("name"))
-      .select(
-        col("name"), col("ds").as("date"), col("sd"),
-        when(col("return_1y_raw") === 0.0, col("ytd")).otherwise(col("return_1y_raw")).as("return_1y"),
-        col("sharpe"),
-        col("alpha"), col("beta"), col("r_square"), col("max_drawdown"),
-        col("peak_date"), col("valley_date"),
-        datediff(col("valley_date"), col("peak_date")).cast("bigint").as("duration"))
+    val s = col("s_pct")
+    val frame = trailingYear(TimeSeries.dailyOrderRevenueBySegment(spark, dir),
+      TimeSeries.dailyBenchmark(spark, dir), Seq("name"))
+      // a segment whose ytd window is empty (its last day is 1 January)
+      // has no ytd value and, as in the oracle's inner join, no row
+      .where(col("ytd").isNotNull)
+    riskRows(frame, Seq("name"),
+      exp(sum(log(lit(1.0) + s))) - lit(1.0),
+      avg(s) / stddev_samp(s) * sqrt(lit(365.0)))
       .orderBy("name")
   }
 
@@ -145,53 +92,26 @@ object Risk {
     * Output: name, ann_return, ann_vol, sharpe, sortino, calmar,
     * tracking_err, info_ratio, max_drawdown. */
   def ratios(spark: SparkSession, dir: String): DataFrame = {
-    val wName = Window.partitionBy("name").orderBy("date")
-    val strat = TimeSeries.dailyOrderRevenueBySegment(spark, dir)
-      .withColumn("s_pct",
-        (col("tvl") - lag(col("tvl"), 1).over(wName)) / lag(col("tvl"), 1).over(wName))
-      .select("name", "date", "s_pct")
-    val wDate = Window.orderBy("date")
-    val bench = TimeSeries.dailyBenchmark(spark, dir)
-      .withColumn("b_pct",
-        (col("bench") - lag(col("bench"), 1).over(wDate)) / lag(col("bench"), 1).over(wDate))
-      .select("date", "b_pct")
-    strat.persist().count() // feeds asOf and the bench join (repo idiom)
-    val asOf = strat.groupBy("name")
-      .agg(max(col("date")).as("ds"), add_months(max(col("date")), -12).as("start"))
-    val joined = strat.join(broadcast(bench), Seq("date"))
-      .join(broadcast(asOf), Seq("name"))
-      .where(col("date") > col("start") && col("date") <= col("ds"))
-      .where(col("s_pct").isNotNull && col("b_pct").isNotNull)
-    joined.persist().count() // feeds stats and the drawdown window
-
+    val s = col("s_pct")
+    val active = col("s_pct") - col("b_pct")
     val ann = sqrt(lit(365.0))
-    val stats = joined.groupBy("name").agg(
-      round(exp(sum(log(lit(1.0) + col("s_pct")))) - lit(1.0), 6).as("ann_return"),
-      round(stddev_samp(col("s_pct")) * ann, 6).as("ann_vol"),
-      round(avg(col("s_pct")) / stddev_samp(col("s_pct")) * ann, 6).as("sharpe"),
-      round(avg(col("s_pct")) / sqrt(avg(pow(least(col("s_pct"), lit(0.0)), 2))) * ann, 6)
-        .as("sortino"),
-      round(stddev_samp(col("s_pct") - col("b_pct")) * ann, 6).as("tracking_err"),
-      round(avg(col("s_pct") - col("b_pct")) /
-        stddev_samp(col("s_pct") - col("b_pct")) * ann, 6).as("info_ratio"),
-      // calmar's numerator: the un-rounded annual return recomputed
-      // inline so both engines divide identical IEEE values
-      (exp(sum(log(lit(1.0) + col("s_pct")))) - lit(1.0)).as("ar_raw"))
-
-    val wCum = wName.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dd = joined
-      .withColumn("cum", sum(col("s_pct")).over(wCum))
-      .withColumn("cummax", max(col("cum")).over(wCum))
-      .groupBy("name")
-      .agg(min(col("cum") - col("cummax")).as("min_dd"))
-
-    val released = stats.join(dd, Seq("name"))
-    released
-      .select(col("name"), col("ann_return"), col("ann_vol"), col("sharpe"),
-        col("sortino"),
-        when(col("min_dd") < 0, round(col("ar_raw") / -col("min_dd"), 6)).as("calmar"),
-        col("tracking_err"), col("info_ratio"),
-        round(col("min_dd"), 6).as("max_drawdown"))
+    // calmar divides the un-rounded annual return, so both engines
+    // divide identical IEEE values
+    val annReturn = exp(sum(log(lit(1.0) + s))) - lit(1.0)
+    val minDd = min(col("min_dd"))
+    trailingYear(TimeSeries.dailyOrderRevenueBySegment(spark, dir),
+        TimeSeries.dailyBenchmark(spark, dir), Seq("name"))
+      .groupBy(col("name"), col("ds"))
+      .agg(
+        round(annReturn, 6).as("ann_return"),
+        round(stddev_samp(s) * ann, 6).as("ann_vol"),
+        round(avg(s) / stddev_samp(s) * ann, 6).as("sharpe"),
+        round(avg(s) / sqrt(avg(pow(least(s, lit(0.0)), 2))) * ann, 6).as("sortino"),
+        when(minDd < 0, round(annReturn / -minDd, 6)).as("calmar"),
+        round(stddev_samp(active) * ann, 6).as("tracking_err"),
+        round(avg(active) / stddev_samp(active) * ann, 6).as("info_ratio"),
+        round(minDd, 6).as("max_drawdown"))
+      .drop("ds")
       .orderBy("name")
   }
 
@@ -200,45 +120,67 @@ object Risk {
     * series (e.g. a 1y return of exactly 0.0 exercising the ytd
     * fallback) without parquet fixtures. */
   def riskFromSeries(stratDaily: DataFrame, benchDaily: DataFrame): DataFrame = {
-    val wDate = Window.orderBy("date")
-    val strat = stratDaily
-      .withColumn("s_pct", (col("tvl") - lag(col("tvl"), 1).over(wDate)) / lag(col("tvl"), 1).over(wDate))
-      .select("date", "s_pct")
-    val bench = benchDaily
-      .withColumn("b_pct", (col("bench") - lag(col("bench"), 1).over(wDate)) / lag(col("bench"), 1).over(wDate))
-      .select("date", "b_pct")
+    val s = col("s_pct")
+    val annual = pow(lit(1.0) + avg(s), 365.0) - lit(1.0)
+    riskRows(trailingYear(stratDaily, benchDaily, Nil), Nil,
+      annual, annual / (stddev_samp(s) * sqrt(lit(365.0))))
+  }
 
-    val asOf = strat.agg(max(col("date")).as("ds"), add_months(max(col("date")), -12).as("start"))
-    val joined = strat.join(bench, Seq("date"))
-      .crossJoin(broadcast(asOf))
-      .where(col("date") > col("start") && col("date") <= col("ds"))
-      .where(col("s_pct").isNotNull && col("b_pct").isNotNull)
+  /** The risk row of each series in a `trailingYear` frame, given the
+    * caller's annual-return and Sharpe aggregates (both rounded here). */
+  private def riskRows(frame: DataFrame, keys: Seq[String],
+                       annual: Column, sharpe: Column): DataFrame = {
+    val (s, b) = (col("s_pct"), col("b_pct"))
+    frame.groupBy((keys :+ "ds").map(col): _*).agg(
+        round(stddev_samp(s) * sqrt(lit(365.0)), 6).as("sd"),
+        round(annual, 6).as("return_1y_raw"),
+        round(sharpe, 6).as("sharpe"),
+        round(regr_intercept(s, b), 6).as("alpha"),
+        round(regr_slope(s, b), 6).as("beta"),
+        round(regr_r2(s, b), 6).as("r_square"),
+        round(min(col("min_dd")), 6).as("max_drawdown"),
+        max(col("peak_date")).as("peak_date"),
+        max(col("valley_date")).as("valley_date"),
+        max(col("ytd")).as("ytd"))
+      .select(keys.map(col) ++ Seq(
+        col("ds").as("date"), col("sd"),
+        when(col("return_1y_raw") === 0.0, col("ytd")).otherwise(col("return_1y_raw")).as("return_1y"),
+        col("sharpe"),
+        col("alpha"), col("beta"), col("r_square"), col("max_drawdown"),
+        col("peak_date"), col("valley_date"),
+        datediff(col("valley_date"), col("peak_date")).cast("bigint").as("duration")): _*)
+  }
 
-    // Ytd compounded return (fallback substitute for a 0.0 1y value):
-    // over the strategy pct series alone, calendar-year-to-date window,
-    // NULL pct compounding as 0 — mirrors the reference's
-    // trailing-return 'ytd' row. 1-row broadcast scalar.
-    val ytd = strat.crossJoin(broadcast(asOf))
-      .where(col("date") > date_trunc("year", col("ds")).cast("date") && col("date") <= col("ds"))
-      .agg(round(exp(sum(log(lit(1.0) + coalesce(col("s_pct"), lit(0.0))))) - lit(1.0), 6).as("ytd"))
-
-    val stats = joined.groupBy(col("ds")).agg(
-      round(stddev_samp(col("s_pct")) * sqrt(lit(365.0)), 6).as("sd"),
-      round(pow(lit(1.0) + avg(col("s_pct")), 365.0) - lit(1.0), 6).as("return_1y_raw"),
-      round((pow(lit(1.0) + avg(col("s_pct")), 365.0) - lit(1.0)) /
-        (stddev_samp(col("s_pct")) * sqrt(lit(365.0))), 6).as("sharpe"),
-      round(regr_intercept(col("s_pct"), col("b_pct")), 6).as("alpha"),
-      round(regr_slope(col("s_pct"), col("b_pct")), 6).as("beta"),
-      round(regr_r2(col("s_pct"), col("b_pct")), 6).as("r_square"))
-
-    // Drawdown over the same window: cumulative sum of daily P&L with a
-    // running max (reference uses cumsum, not compounding — SURVEY.md §8.5).
-    // Valley/peak located with unpartitioned analytic windows in ONE
-    // pass over the (bounded, O(365)-row) series instead of a chain of
-    // scalar-aggregate cross-joins that would each rescan the input.
-    val wCum = Window.orderBy("date").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.orderBy(lit(1)).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val dd = joined
+  /** The trailing-year frame every risk operator aggregates, one sort
+    * per series (`keys`: Nil for one series, Seq("name") for many):
+    *  - `s_pct` of the strategy's `tvl`, left-joined to the benchmark's
+    *    `b_pct` on date;
+    *  - over every day of the series: `ds`, its last date, and `ytd`,
+    *    the calendar-year-to-date compounded return with a NULL pct
+    *    compounding as 0 (the reference's trailing-return 'ytd' row,
+    *    substituted for a 1y return of exactly 0.0);
+    *  - then only the trailing year (ds − 12 months, ds] with both pcts
+    *    present, and over it the drawdown: cumulative sum of daily P&L
+    *    with a running max (the reference uses cumsum, not compounding —
+    *    SURVEY.md §8.5), `min_dd`, the earliest valley reaching it and
+    *    the earliest peak before that valley.
+    * Per-series constants repeat on every row: read them with min/max
+    * and group by (keys, ds), never a global agg, so a series with an
+    * empty window yields no row rather than an all-null one. */
+  private def trailingYear(strat: DataFrame, bench: DataFrame, keys: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy("date")
+    val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val inYtd = col("date") > date_trunc("year", col("ds")).cast("date")
+    strat
+      .select(keys.map(col) ++ Seq(col("date"), TimeSeries.pctChange(col("tvl"), w).as("s_pct")): _*)
+      .join(broadcast(bench.select(col("date"), TimeSeries.pctChange(col("bench")).as("b_pct"))),
+        Seq("date"), "left")
+      .withColumn("ds", max(col("date")).over(wAll))
+      .withColumn("ytd", round(exp(sum(
+        when(inYtd, log(lit(1.0) + coalesce(col("s_pct"), lit(0.0))))).over(wAll)) - lit(1.0), 6))
+      .where(col("date") > add_months(col("ds"), -12) &&
+        col("s_pct").isNotNull && col("b_pct").isNotNull)
       .withColumn("cum", sum(col("s_pct")).over(wCum))
       .withColumn("cummax", max(col("cum")).over(wCum))
       .withColumn("dd", col("cum") - col("cummax"))
@@ -247,19 +189,5 @@ object Risk {
       .withColumn("peak_cum", min(when(col("dd") === col("min_dd"), col("cummax"))).over(wAll))
       .withColumn("peak_date",
         min(when(col("date") <= col("valley_date") && col("cum") === col("peak_cum"), col("date"))).over(wAll))
-
-    val drawdown = dd.groupBy(col("valley_date"), col("peak_date")).agg(
-      round(min(col("min_dd")), 6).as("max_drawdown"))
-
-    stats
-      .crossJoin(broadcast(drawdown))
-      .crossJoin(broadcast(ytd))
-      .select(
-        col("ds").as("date"), col("sd"),
-        when(col("return_1y_raw") === 0.0, col("ytd")).otherwise(col("return_1y_raw")).as("return_1y"),
-        col("sharpe"),
-        col("alpha"), col("beta"), col("r_square"), col("max_drawdown"),
-        col("peak_date"), col("valley_date"),
-        datediff(col("valley_date"), col("peak_date")).cast("bigint").as("duration"))
   }
 }

@@ -109,6 +109,17 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("risk ratios: one row per segment, calmar null exactly at zero drawdown") {
+    val rows = Risk.ratios(spark, sf).collect()
+    val segs = Tables.customer(spark, sf).select("c_mktsegment").distinct().count()
+    assert(rows.length === segs.toInt)
+    rows.foreach { row =>
+      val dd = row.getAs[Double]("max_drawdown")
+      assert(dd <= 0.0)
+      assert(row.isNullAt(row.fieldIndex("calmar")) === (dd == 0.0))
+    }
+  }
+
   test("trailing return by segment: six periods per segment, gated on window start") {
     val df = TimeSeries.trailingReturnBySegment(spark, sf)
     val perSeg = df.groupBy("name").count().collect()
@@ -531,6 +542,18 @@ class OperatorsSpec extends SparkSpec {
     // avg pct = (0.5 - 0.4) / 2 = 0.05 → (1.05)^365 - 1, definitely not ytd (= 0.35)
     val expected = math.pow(1.05, 365.0) - 1.0
     assert(math.abs(row.getAs[Double]("return_1y") - expected) < 1e-4)
+  }
+
+  test("risk: an empty trailing window yields no row, not an all-null one") {
+    import spark.implicits._
+    def series(col0: String, pts: (String, Double)*) =
+      pts.toDF("d", col0).select(to_date(col("d")).as("date"), col(col0))
+    val bench = series("bench", "2024-03-01" -> 100.0, "2024-03-02" -> 110.0, "2024-03-03" -> 121.0)
+    // one day: no day-over-day change at all
+    assert(Risk.riskFromSeries(series("tvl", "2024-03-02" -> 100.0), bench).count() === 0)
+    // no date in common with the benchmark
+    val disjoint = series("tvl", "2023-03-01" -> 100.0, "2023-03-02" -> 150.0, "2023-03-03" -> 90.0)
+    assert(Risk.riskFromSeries(disjoint, bench).count() === 0)
   }
 
   test("banded near-dup finds constructed near-duplicates via candidates only") {

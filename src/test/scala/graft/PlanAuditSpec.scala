@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *  - no `CartesianProduct` anywhere, ever;
   *  - `BroadcastNestedLoopJoin` only in the whitelisted queries whose
   *    nested-loop side is a documented BOUNDED broadcast (1-row scalar
-  *    carriers, the <=10-row query side, k centroids, the interval
-  *    dim, the 6-period dim) — a new unbounded one fails the suite;
+  *    carriers, the <=10-row query side, the interval dim, the
+  *    6-period dim) — a new unbounded one fails the suite, and so does
+  *    a listed query that no longer plans one;
   *  - predicate pushdown reaches the parquet scan where the operator
   *    contract promises it.
   */
@@ -42,27 +43,20 @@ class PlanAuditSpec extends SparkSpec {
     "rel_bucket_join")
 
   /** Bounded-broadcast nested loops, each justified at the operator:
-    * ev_range_join = broadcast interval dim; risk /
-    * ts_trailing_return = 1-row (or 6-row period) scalar carriers;
-    * (text_tfidf and rel_basket left this list in r18: their 1-row /
-    * brand-count carriers became driver literals); sim_topk = <=10-row query side; sim_ivf = 10 x k
-    * centroid probe; sim_kmeans = k-row broadcast centroid table per
-    * assignment pass; ev_funnel / ev_funnel_window = 1-row stage-count
+    * ev_range_join = broadcast interval dim; ts_trailing_return =
+    * 6-row period dim; sim_topk = <=10-row query side; sim_ivf = 10 x k
+    * centroid probe; ev_funnel / ev_funnel_window = 1-row stage-count
     * scalar carriers; text_lm_score = 1-row vocabulary-size carrier;
     * sim_rp_audit = <=10-row query side; ts_seasonality = 1-row
     * overall-mean carrier; text_collocations = 1-row corpus-total
     * (n_uni / n_bg) carriers off the persisted caches;
-    * (rel_benford / text_kn_score left this list in r18: their totals
-    * became a bounded-spine window sum / a materializing agg-collect
-    * literal);
     * rel_skew_audit / text_source_mix / rel_promo_share = 1-row
     * total carriers; sim_neardup_sweep = 13-row threshold dim
     * (the ev_range_join pattern); sim_recall = brute-force side's
-    * <=10-row query broadcast (inherited from sim_topk);
-    * sim_pagerank = 1-row node-count + dangling-mass carriers (its
-    * five iterations persist as they build, so construction runs jobs
-    * like the cluster family, but the final plan is still auditable
-    * and its nested loops are all 1-row scalar carriers). */
+    * <=10-row query broadcast (inherited from sim_topk).
+    * The list is checked both ways, like the window inventory: every
+    * entry must be audited (not in `executesAtConstruction`) and must
+    * still plan a nested loop. */
   private val boundedNestedLoop = Set(
     // Q-bounded query-side broadcast (vec_id < 10) against the corpus
     // scan, the bruteForceTopK shape — inherited from the sim_mmr
@@ -71,10 +65,10 @@ class PlanAuditSpec extends SparkSpec {
     // (rel_ntile and rel_zorder left this list in r18: the global-rank
     // helper's offset BNLJ and ntile's 1-row n carrier were replaced by
     // a literal map over the config-bounded collected partition counts)
-    "ev_range_join", "risk", "ts_trailing_return",
-    "sim_topk", "sim_ivf", "sim_kmeans", "ev_funnel",
+    "ev_range_join", "ts_trailing_return",
+    "sim_topk", "sim_ivf", "ev_funnel",
     "ev_funnel_window", "text_lm_score", "sim_rp_audit", "ts_seasonality",
-    "sim_pagerank", "text_collocations",
+    "text_collocations",
     "rel_skew_audit", "text_source_mix", "rel_promo_share",
     "sim_neardup_sweep", "sim_recall",
     // 1-row token-budget (b) + weight-sum (sum_w) scalar carriers
@@ -83,8 +77,6 @@ class PlanAuditSpec extends SparkSpec {
     "text_quality_sweep", "text_funnel",
     // 31-row trailing-slice pairwise join + 1-row median-slope carrier
     "ts_theilsen",
-    // k-row broadcast centroid table (inherited from sim_kmeans' assignment)
-    "sim_semdedup",
     // 1-row vocabulary-size carrier (inherited from text_lm_score)
     "text_ccnet",
     // 1-row purchase-total/user-count carrier (conversion threshold)
@@ -95,8 +87,6 @@ class PlanAuditSpec extends SparkSpec {
     "text_epoch_mix",
     // 1-row pooled-rate carrier (p-chart center line)
     "ev_error_spc",
-    // 1-row total-revenue carrier (ABC thresholds)
-    "rel_abc_pareto",
     // 1-row max-date carrier (dormancy reference point)
     "ev_dormancy",
     // 1-row max-date carriers (round 16: replaced the unpartitioned
@@ -110,17 +100,9 @@ class PlanAuditSpec extends SparkSpec {
     "text_qclf_isotonic",
     // same bounded bin-range joins + a 1-row floor carrier
     "text_qclf_cal_eval",
-    // 16-row entry dim × 10-row query broadcast (the sim_topk pattern)
-    "sim_graph_search",
-    // composes sim_graph_search (same bounded entry × query cross)
-    "sim_graph_recall",
     // composes the landed walk answers with bruteForceTopK's exact
     // ranks (10-row query broadcast × corpus, the sim_topk pattern)
     "sim_search_ndcg",
-    // 64-row per-shard entry dim × 10-row query broadcast
-    "sim_sharded_search",
-    // 16-row entry dim × 10-row query broadcast (ADC walk)
-    "sim_pq_search",
     // 1-row global-scale carrier + 10-row query broadcast (the
     // sim_topk pattern over int8 codes)
     "sim_sq8_search",
@@ -132,6 +114,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("no cartesian products; nested-loop joins only where bounded and whitelisted") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    val stale = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if !executesAtConstruction(name)) {
       val plan = fn(spark, sf).queryExecution.executedPlan.toString
@@ -139,9 +122,17 @@ class PlanAuditSpec extends SparkSpec {
         offenders += s"$name: CartesianProduct"
       if (plan.contains("BroadcastNestedLoopJoin") && !boundedNestedLoop(name))
         offenders += s"$name: unlisted BroadcastNestedLoopJoin"
+      if (!plan.contains("BroadcastNestedLoopJoin") && boundedNestedLoop(name))
+        stale += name
       spark.catalog.clearCache()
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
+    val unaudited = boundedNestedLoop.intersect(executesAtConstruction) ++
+      boundedNestedLoop.diff(SparkEntry.queries.keySet)
+    assert(stale.isEmpty && unaudited.isEmpty,
+      s"nested-loop whitelist entries with no nested loop left (tighten the " +
+        s"list): ${stale.sorted.mkString(", ")}; never audited: " +
+        s"${unaudited.toSeq.sorted.mkString(", ")}")
   }
 
   /** Queries whose optimized plan carries a Window with NO partition
@@ -154,7 +145,8 @@ class PlanAuditSpec extends SparkSpec {
     * the ≤BpeDeepK-row merge table. The test asserts BOTH directions:
     * a new unpartitioned window outside this set fails (the 100×
     * foot-gun), and a stale entry that stopped windowing globally
-    * fails (inventory rot). */
+    * fails (inventory rot). Windows inside a cached relation count:
+    * the audit reads each `InMemoryRelation`'s logical plan too. */
   private val boundedUnpartitionedWindow: Set[String] = Set(
     // the single-series daily parity family: every window runs over
     // the O(#days) calendar rollup of orders (the reference's
@@ -163,6 +155,12 @@ class PlanAuditSpec extends SparkSpec {
     "ts_changepoint", "ts_forecast", "ts_gotk", "ts_interpolate",
     "ts_moving_avg", "ts_rolling_corr", "ts_stl", "ts_total_return",
     "ts_trailing_return", "ts_tvl", "ts_var",
+    // the benchmark series' day-over-day lag window: the one O(#days)
+    // daily lineitem rollup, broadcast into the per-segment frame
+    "risk_by_segment", "risk_ratios",
+    // the trailing 31-row slice (row_number from the latest day, then
+    // its first-day offset) of the O(#days) rollup
+    "ts_theilsen",
     // daily rollups on the events side: as-of over the union of two
     // day series; cumulative acquisition over the first-seen day rollup
     "ev_asof", "ev_cumulative_users",
@@ -194,17 +192,23 @@ class PlanAuditSpec extends SparkSpec {
     // top-50 vocabulary slice (rank bounded by k, not the vocabulary)
     "text_zipf")
 
+  private def unpartitionedWindows(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = p.flatMap {
+    case w: org.apache.spark.sql.catalyst.plans.logical.Window
+      if w.partitionSpec.isEmpty => Seq(w)
+    case w: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit
+      if w.partitionSpec.isEmpty => Seq(w)
+    case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+      unpartitionedWindows(r.cacheBuilder.logicalPlan)
+    case _ => Nil
+  }
+
   test("unpartitioned windows only over inputs bounded by construction") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val stale = scala.collection.mutable.ArrayBuffer.empty[String]
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if !executesAtConstruction(name)) {
-      val unpart = fn(spark, sf).queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-        case w: org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit
-          if w.partitionSpec.isEmpty => w
-      }
+      val unpart = unpartitionedWindows(fn(spark, sf).queryExecution.optimizedPlan)
       if (unpart.nonEmpty && !boundedUnpartitionedWindow(name)) offenders += name
       if (unpart.isEmpty && boundedUnpartitionedWindow(name)) stale += name
       spark.catalog.clearCache()
@@ -215,6 +219,43 @@ class PlanAuditSpec extends SparkSpec {
     assert(stale.isEmpty,
       s"inventory entries with no unpartitioned window left (tighten the " +
         s"list): ${stale.sorted.mkString(", ")}")
+  }
+
+  /** Jobs that building and collecting `df` run, counted through a job
+    * group. The status store fills from the listener bus
+    * asynchronously, so a marker job in a second group is awaited
+    * first: its events queue behind the collect's. */
+  private def jobsToRun(df: => org.apache.spark.sql.DataFrame, group: String): Int = {
+    val sc = spark.sparkContext
+    def inGroup[A](g: String)(body: => A): A = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    inGroup(group)(df.collect())
+    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    def markerDone = sc.statusTracker.getJobIdsForGroup(s"$group-marker").exists(id =>
+      sc.statusTracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+    while (!markerDone && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(markerDone, s"$group: the status store never saw the marker job")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("the risk family plans one bounded pass: no nested loop, no cache, pinned jobs") {
+    // one trailing-year frame per operator: a scalar carrier joined back
+    // would plan a nested loop, a persist-then-count fan-out an
+    // InMemoryRelation, and either costs jobs of its own. The bounds are
+    // the job counts measured under this session's settings.
+    for ((name, maxJobs) <- Seq("risk" -> 6, "risk_by_segment" -> 8, "risk_ratios" -> 8)) {
+      val df = SparkEntry.queries(name)(spark, sf) // builds any missing artifact first
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name plans a nested loop:\n$plan")
+      assert(!df.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
+        s"$name reads a cached relation")
+      val jobs = jobsToRun(SparkEntry.queries(name)(spark, sf), s"plan-audit-$name")
+      assert(jobs <= maxJobs, s"$name ran $jobs jobs, bound $maxJobs")
+    }
   }
 
   test("artifact-backed consumers read the landed parquet, not the derivation") {
