@@ -7,10 +7,13 @@ import org.apache.spark.sql.types.StructType
   * explicit `bigquery.SchemaField` lists (`aave_extract.py:45-55`,
   * `aave_transform.py:228-234,275-281,300-303,328-332,499-513`;
   * SURVEY.md §1.2). The reference never infers schemas on load and
-  * neither does this engine: sinks validate against these before
-  * writing, so a drifted upstream fails the load step instead of
-  * corrupting the table (the reference's load-job type-check,
-  * `aave_extract.py:717-723`).
+  * neither does this engine: the extract checks its output against
+  * [[rawSupply]] (`Finance.extractRawSupply`, the one boundary where
+  * an upstream adapter's types enter), so a drifted upstream fails
+  * the extract step instead of corrupting the raw zone (the
+  * reference's load-job type-check, `aave_extract.py:717-723`). The
+  * transform schemas are the output contract the transforms are
+  * tested against (`PipelineSpec`).
   */
 object Schemas {
 

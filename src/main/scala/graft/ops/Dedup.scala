@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -413,33 +413,6 @@ object Dedup {
   /** MinHash + LSH band candidate generation. Output: doc_a, doc_b. */
   def minhashCandidates(spark: SparkSession, dir: String): DataFrame =
     pairsFromCapped(cappedBandArtifact(spark, dir)).orderBy("doc_a", "doc_b")
-
-  /** Per-row (doc_id, b, key) band derivation over a (doc_id, text)
-    * table with NO aggregation: the min-hash minimums run inside
-    * array HOFs over the per-doc shingle array, so the whole
-    * derivation is map-side — the form a STREAMING source can run in
-    * append mode (a `groupBy(doc_id)` signature aggregate is stateful
-    * there), and bit-identical to `sigsFrom`+`bandsOf` by
-    * construction: same distinct 12-char shingles, same two salted
-    * digests, same four 8-hex windows, same band-pair md5 keys. The
-    * two digest arrays are materialized as columns first so the eight
-    * window-minimums don't re-hash the shingles 8×. */
-  private[graft] def mapSideBands(docs: DataFrame): DataFrame = {
-    def mh(j: Int): Column =
-      array_min(transform(col(s"d${j / 4}"),
-        dg => conv(dg.substr(lit((j % 4) * 8 + 1), lit(8)), 16, 10).cast("long")))
-    val bandKeys = array((0 until 4).map(b =>
-      md5(concat(mh(2 * b).cast("string"), lit("_"), mh(2 * b + 1).cast("string")))): _*)
-    docs
-      .where(length(col("text")) >= 12) // same short-doc guard as shingleTable
-      .select(col("doc_id"),
-        expr("array_distinct(transform(sequence(1, length(text) - 11), i -> substring(text, i, 12)))")
-          .as("shs"))
-      .select(col("doc_id"),
-        transform(col("shs"), s => md5(concat(lit("0|"), s))).as("d0"),
-        transform(col("shs"), s => md5(concat(lit("1|"), s))).as("d1"))
-      .select(col("doc_id"), posexplode(bandKeys).as(Seq("b", "key")))
-  }
 
   /** Exact n-gram Jaccard over MinHash candidates: |A∩B| / |A∪B| on
     * distinct 12-char shingle sets, thresholded at 0.3. The sets are

@@ -8,9 +8,9 @@ import graft.Tables
 
 /** Event-stream-shaped operators over the `events` table: event-time
   * tumbling-window aggregation, JSON prop extraction, gap-based
-  * sessionization, and an as-of (backward-looking) join — the batch
-  * twins of the Structured Streaming pipelines in
-  * `graft.streaming` (SURVEY.md §2.9/§7.5).
+  * sessionization, and an as-of (backward-looking) join — run as
+  * batch passes, like the reference's batch-daily DAG (SURVEY.md
+  * §2.9/§7.5).
   *
   * Scale notes: hourly rollup and sessionization both shuffle once on
   * their natural keys (hour/event_type, user_id); sessionization's
@@ -944,18 +944,16 @@ object Events {
     sketchReadout(sketchBuckets(Tables.events(spark, dir)))
 
   /** The sketch state: per-(event_type, bucket) counts — ≤ 64 rows
-    * per key, mergeable by integer addition (the streaming gate lands
-    * one of these per micro-batch and the monitor sums them). */
-  private[graft] def sketchBuckets(events: DataFrame): DataFrame =
+    * per key, mergeable by integer addition. */
+  private def sketchBuckets(events: DataFrame): DataFrame =
     events
       .select(col("event_type"), round(col("value") * 1e6).cast("bigint").as("v"))
       .withColumn("bucket",
         when(col("v") <= 0, lit(0L)).otherwise(length(bin(col("v"))).cast("bigint")))
       .groupBy("event_type", "bucket").agg(count(lit(1)).as("c"))
 
-  /** The rank readout over a (event_type, bucket, c) state table —
-    * shared by the batch query and the streaming monitor. */
-  private[graft] def sketchReadout(h: DataFrame): DataFrame = {
+  /** The rank readout over a (event_type, bucket, c) state table. */
+  private def sketchReadout(h: DataFrame): DataFrame = {
     val wt = Window.partitionBy("event_type")
     val run = Window.partitionBy("event_type").orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

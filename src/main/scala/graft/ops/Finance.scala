@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Schemas
 import graft.sources.ChainSource
 
 /** The reference's extract-side financial math and pipeline shape
@@ -66,7 +67,7 @@ object Finance {
     val calendar = spark.sql(
       s"SELECT explode(sequence(to_date('$start'), to_date('$end'))) AS date")
     val observed = chain.observations(spark)
-    calendar
+    val raw = calendar
       .join(observed, Seq("date"), "left")
       .join(broadcast(assetPrice.select(col("date"), col("price").as("asset_price"))), Seq("date"), "left")
       .join(broadcast(aavePrice.select(col("date"), col("price").as("aave_price"))), Seq("date"), "left")
@@ -79,12 +80,14 @@ object Finance {
           .otherwise(lit(0.0)))
       .withColumn("total_apy", totalApy(col("stake_apy"), col("aave_apy")))
       // declared-schema boundary: the raw_supply table is all FLOAT64
-      // (Schemas.rawSupply) — adapters may hand over decimals
+      // — adapters may hand over decimals, so cast here and check the
+      // result against Schemas.rawSupply (analysis only, no job)
       .select(Seq(col("date"), col("name")) ++
         Seq("stake_apy", "aave_apy", "total_apy", "liquidity_index",
           "atoken_supply", "asset_price", "aave_price")
           .map(c => col(c).cast("double").as(c)): _*)
       .orderBy("date")
+    Schemas.enforce(raw, Schemas.rawSupply)
   }
 
   /** Raw-zone load step (reference `load_to_bq`, `aave_extract.py:679-730`):

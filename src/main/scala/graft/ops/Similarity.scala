@@ -2033,9 +2033,9 @@ object Similarity {
     * note in [[beamSearchReleasable]]); the checkpoint blocks,
     * however, are only reclaimed by the ContextCleaner once the
     * backing RDD is garbage-collected on the driver — nondeterministic
-    * timing a long-lived streaming query (one walk per micro-batch)
-    * cannot rely on. This ladder restores the old persist/unpersist
-    * path's eager reclamation: `next` checkpoints a stage and
+    * timing a long-lived process (one walk per artifact build, many
+    * builds per JVM) cannot rely on. This ladder reclaims eagerly:
+    * `next` checkpoints a stage and
     * immediately frees the stage it supersedes (fully consumed, the
     * checkpoint was eager), and `release` frees whatever is still
     * live (the final stage) once the caller has materialized its
@@ -2058,77 +2058,31 @@ object Similarity {
     def release(): Unit = { live.foreach(_.unpersist(false)); live = Nil }
   }
 
-  /** The beam walk over explicit state — the seam `graphSearch`
-    * (artifact-cached corpus) and the streaming search gate
-    * (`streaming.VecStreams` probing a landed `NavIndex` release)
-    * share. `corpus` is (vec_id, v, norm), `q` is (qid, qv, qnorm) —
-    * query ids live in their own id space; a corpus node equal to a
-    * qid is excluded as a self-match, which is inert for external
-    * queries. `edges` is the undirected navigable graph. Entry set:
-    * the 16 lowest corpus vec_ids. Output: qid, nbr_id, cos, rank
-    * (the final beam's top-3). */
-  private[graft] def beamSearchFrom(spark: SparkSession, corpus: DataFrame,
-      q: DataFrame, edges: DataFrame): DataFrame =
-    beamSearchReleasable(spark, corpus, q, edges)._1
-
-  /** [[beamSearchReleasable]] under a metadata filter — the in-walk
-    * (ACORN-bridged) strategy over explicit state: beam membership
-    * restricted to `elig` (node), entries from its 16 lowest ids,
-    * expansion through neighbors and neighbors-of-neighbors. The seam
-    * the streaming filtered gate (`streaming.VecStreams`) probes. */
-  private[graft] def filteredBeamReleasable(spark: SparkSession, corpus: DataFrame,
-      q: DataFrame, edges: DataFrame, elig: DataFrame): (DataFrame, () => Unit) =
-    beamSearchReleasable(spark, corpus, q, edges, Some(elig))
-
-  /** The `harvest` strategy over explicit state — unfiltered
-    * navigation at [[filteredOverfetchFor]] width, answer set
-    * accumulated from every eligible candidate any hop scored (the
-    * [[filteredAnswersShared]] construction for the streaming gate's
-    * index-probe posture). */
-  private[graft] def filteredHarvestReleasable(spark: SparkSession, corpus: DataFrame,
-      q: DataFrame, edges: DataFrame, elig: DataFrame): (DataFrame, () => Unit) =
-    beamSearchReleasable(spark, corpus, q, edges, Some(elig), harvest = true)
-
-  /** `beamSearchFrom` with the final beam-stage cache handle — the
-    * streaming gate releases per micro-batch after its sink write
-    * (`CachePolicy` exception: a stream has no between-queries runner
-    * sweep, and per-batch leaks accumulate for the query's lifetime);
-    * batch callers ignore it and lean on the runner contract. */
+  /** The beam walk over explicit state, with the final beam-stage
+    * release handle — the walk behind [[navAnswersShared]], whose
+    * artifact build calls the handle once the answers have landed.
+    * `corpus` is (vec_id, v, norm), `q` is (qid, qv, qnorm) — query
+    * ids live in their own id space; a corpus node equal to a qid is
+    * excluded as a self-match, which is inert for external queries.
+    * `edges` is the undirected navigable graph. Entry set:
+    * [[navEntries]]. Output: qid, nbr_id, cos, rank (the final beam's
+    * top-3). The metadata-filtered strategies keep their own walk in
+    * [[filteredAnswersShared]]. */
   private[graft] def beamSearchReleasable(spark: SparkSession, corpus: DataFrame,
-      q: DataFrame, edges: DataFrame,
-      elig0: Option[DataFrame] = None,
-      harvest: Boolean = false): (DataFrame, () => Unit) = {
+      q: DataFrame, edges: DataFrame): (DataFrame, () => Unit) = {
     def d(a: Column, b: Column) = VectorFunctions.dot(spark, a, b)
     val nCorpus = corpus.count()
-    // persist + materialize: the eligible set is broadcast into every
-    // hop stage — without this each broadcast re-plans its source
-    val elig = elig0.map(_.persist())
-    elig.foreach(_.count())
-    // harvest navigates UNFILTERED (the eligible set restricts only
-    // the accumulated answer rows); in-walk restricts beam membership
-    val memberElig = if (harvest) None else elig
-    val entries = navEntries(corpus, memberElig, nCorpus)
-    // width ladder per mode: the unfiltered serving walk rides
-    // [[navBeamFor]] (48 in the entry-pinned driver regime, 16 past
-    // 2048 where spread entries + the hop ladder carry recall — 30/30
-    // at ×100 mixture); the filtered modes scale like the artifact
-    // path's strategies
-    val width =
-      if (harvest) filteredOverfetchFor(nCorpus)
-      else if (elig.isDefined) filteredBeamFor(nCorpus)
-      else navBeamFor(nCorpus)
+    val entries = navEntries(corpus, None, nCorpus)
+    // [[navBeamFor]]: 48 in the entry-pinned driver regime, 16 past
+    // 2048 where spread entries + the hop ladder carry recall (30/30
+    // at ×100 mixture)
+    val width = navBeamFor(nCorpus)
 
-    // score a candidate (qid, node) set and keep the best b per query;
-    // under a filter, beam MEMBERSHIP joins the eligible set
+    // score a candidate (qid, node) set and keep the best b per query
     def beam(c0: DataFrame, b: Int): DataFrame = {
       val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("node"))
-      // eligibility before the distinct — map-side broadcast filter
-      // shrinks the distinct exchange (same candidate SET)
-      val c = memberElig match {
-        case Some(e) => c0.join(broadcast(e), "node").distinct()
-        case None => c0.distinct()
-      }
-      c.join(corpus.select(col("vec_id").as("node"),
+      c0.distinct()
+        .join(corpus.select(col("vec_id").as("node"),
           col("v").as("nv"), col("norm").as("nnorm")), "node")
         .join(broadcast(q), "qid")
         .where(col("node") =!= col("qid"))
@@ -2137,21 +2091,10 @@ object Similarity {
         .where(col("rn") <= b)
         .select(col("qid"), col("node"), col("cos"), col("rn"))
     }
-    // filtered in-walk hops bridge through neighbors-of-neighbors
-    // (ACORN)
     def hop(s: DataFrame): DataFrame = {
       val b0 = s.select("qid", "node")
-      val n1 = b0.join(edges, "node").select(col("qid"), col("nbr_id").as("node"))
-      val exp = memberElig match {
-        case Some(_) =>
-          // dedup the 1-hop frontier before the deg² expansion join
-          // (candidate SET unchanged)
-          val n1d = n1.distinct()
-          val n2 = n1d.join(edges, "node").select(col("qid"), col("nbr_id").as("node"))
-          b0.unionByName(n1d).unionByName(n2)
-        case None => b0.unionByName(n1)
-      }
-      beam(exp, width)
+      beam(b0.unionByName(b0.join(edges, "node")
+        .select(col("qid"), col("nbr_id").as("node"))), width)
     }
 
     // each hop references its input twice (beam keep + expansion), so
@@ -2163,35 +2106,15 @@ object Similarity {
     // 7+ hops — the navGraphFrom lesson at beam scale). The HopStages
     // ladder materializes each Q×16-row stage to a flat LogicalRDD,
     // frees superseded hop blocks eagerly, and the release handle
-    // frees the final stage — so the streaming gate's per-batch
-    // release() is deterministic again instead of waiting on the
-    // ContextCleaner noticing a driver GC.
+    // frees the final stage.
     val hops = navHopsFor(nCorpus)
     val stages = new HopStages
-    val hstages = new HopStages
-    def eligRows(s: DataFrame): DataFrame =
-      s.join(broadcast(elig.get), "node").select("qid", "node", "cos")
     var s = stages.next(beam(q.select("qid").crossJoin(broadcast(entries)), width))
-    var h = if (harvest) Some(hstages.next(eligRows(s))) else None
-    for (_ <- 1 to hops) {
-      s = stages.next(hop(s))
-      // the same (qid, node) reappears across hops with the same
-      // deterministic 6-dp cosine, so distinct is an exact dedup
-      h = h.map(acc => hstages.next(acc.unionByName(eligRows(s)).distinct()))
-    }
-    val out = h match {
-      case Some(acc) =>
-        val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("node"))
-        acc.withColumn("rank", row_number().over(w))
-          .where(col("rank") <= 3)
-          .select(col("qid"), col("node").as("nbr_id"),
-            col("cos"), col("rank").cast("bigint").as("rank"))
-      case None =>
-        s.where(col("rn") <= 3)
-          .select(col("qid"), col("node").as("nbr_id"),
-            col("cos"), col("rn").cast("bigint").as("rank"))
-    }
-    (out, () => { elig.foreach(_.unpersist()); stages.release(); hstages.release() })
+    for (_ <- 1 to hops) s = stages.next(hop(s))
+    val out = s.where(col("rn") <= 3)
+      .select(col("qid"), col("node").as("nbr_id"),
+        col("cos"), col("rn").cast("bigint").as("rank"))
+    (out, () => stages.release())
   }
 
   /** The MATERIALIZED kNN index, an `ArtifactCache` artifact: the

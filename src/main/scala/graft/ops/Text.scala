@@ -464,38 +464,6 @@ object Text {
       .orderBy("doc_id", "chunk_idx")
   }
 
-  /** Per-document CDC chunker — the PURE function equivalent of one
-    * document's slice of [[cdcChunksDocs]] (the `CdcParitySpec` case
-    * pins them row-identical), for contexts where a window is
-    * unavailable: the streaming gate computes an arriving doc's
-    * chunks map-side with this. Returns (chunk_idx, n_toks,
-    * start_pos, sig). */
-  private[graft] def cdcChunksOf(text: String): Seq[(Long, Long, Long, Long)] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def hex(s: String): String =
-      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val toks = text.split(" ", -1)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var chunk = 0L; var n = 0L; var start = 0L; var sig = 0L
-    for (pos <- toks.indices) {
-      val win4 = Seq(
-        if (pos >= 3) toks(pos - 3) else "",
-        if (pos >= 2) toks(pos - 2) else "",
-        if (pos >= 1) toks(pos - 1) else "",
-        toks(pos)).mkString(" ")
-      n += 1
-      sig += java.lang.Long.parseLong(hex(toks(pos)).substring(6, 14), 16)
-      val cut = pos >= 3 &&
-        java.lang.Long.parseLong(hex(win4).substring(0, 6), 16) % 64 == 0
-      if (cut) {
-        out += ((chunk, n, start, sig))
-        chunk += 1; n = 0; sig = 0; start = pos + 1L
-      }
-    }
-    if (n > 0) out += ((chunk, n, start, sig))
-    out.toSeq
-  }
-
   /** Chunk-level duplication report — the CDC payoff: chunks whose
     * (signature, token count) appears in MORE THAN ONE document are
     * duplicated content even when the containing documents differ
@@ -1960,8 +1928,8 @@ object Text {
       .select(col("doc_id"),
         expr("cast(1000000 - cast(substring(v, 33) as int) as bigint)").as("pos"),
         expr("substring(v, 1, 32)").as("fp"))
-      // no orderBy here: `winnow` sorts its own output, and the seam
-      // must stay streaming-legal for `DocStreams.partialCopyGate`
+      // no orderBy here: `winnow` sorts its own output, and no
+      // other consumer needs an order
 
   /** Partial-copy pair detection over the winnowing fingerprints:
     * docs sharing ≥ 2 selected fingerprints, scored by containment
@@ -2523,10 +2491,9 @@ object Text {
   def qclfTrain(spark: SparkSession, dir: String): DataFrame =
     qclfWeightsArtifact(spark, dir).orderBy("f")
 
-  /** Score an arbitrary documents table with a given weight model —
-    * the serving-side entry the streaming gate shares with the batch
-    * queries. Output: doc_id, y, m, score. */
-  private[graft] def qclfScoreDocs(docs: DataFrame, wts: DataFrame): DataFrame =
+  /** Score a documents table with a given weight model.
+    * Output: doc_id, y, m, score. */
+  private def qclfScoreDocs(docs: DataFrame, wts: DataFrame): DataFrame =
     qclfMargin(qclfFeats(docs), wts)
       .join(qclfLabels(docs), "doc_id") // every doc has ≥1 token → a margin row
       .withColumn("score", round(lit(1.0) / (lit(1.0) + exp(-col("m"))), 6))
@@ -2750,20 +2717,17 @@ object Text {
       side(col("doc_id") % 4 === 0, "n_cur"))
   }
 
-  /** Calibration-bin assignment shared by the batch PSI and the
-    * streaming drift gate: integer micros, 50k-wide bins, top bin
-    * capped at 19 (score 1.0 folds into the last bin).
-    * Output: doc_id, su, bin. */
-  private[graft] def qclfBinned(scored: DataFrame): DataFrame =
+  /** Calibration-bin assignment for [[qclfPsi]]: integer micros,
+    * 50k-wide bins, top bin capped at 19 (score 1.0 folds into the
+    * last bin). Output: doc_id, su, bin. */
+  private def qclfBinned(scored: DataFrame): DataFrame =
     scored
       .select(col("doc_id"), round(col("score") * 1e6).cast("bigint").as("su"))
       .withColumn("bin", least(expr("su div 50000"), lit(19L)))
 
   /** PSI table from two per-bin count tables (`bin, n_ref` /
-    * `bin, n_cur`) — the [[qclfPsi]] core, shared with the streaming
-    * drift monitor so the live readout is definitionally the batch
-    * number. Inputs may omit empty bins; the dense spine restores
-    * them. */
+    * `bin, n_cur`) — the [[qclfPsi]] core. Inputs may omit empty
+    * bins; the dense spine restores them. */
   private[graft] def psiTable(spark: SparkSession, ref: DataFrame,
       cur: DataFrame): DataFrame = {
     val j = spark.range(20).select(col("id").as("bin"))
@@ -2786,14 +2750,6 @@ object Text {
         round(sum(col("contrib")).over(run), 6).as("cum_psi"))
       .orderBy("bin")
   }
-
-  /** The landed reference histogram a live drift monitor compares
-    * against: per-bin score counts of the calibration window (the
-    * 75% state slice). Output: bin, n_ref. */
-  private[graft] def qclfRefBins(spark: SparkSession, dir: String): DataFrame =
-    qclfBinned(qclfScored(spark, dir))
-      .where(col("doc_id") % 4 =!= 0)
-      .groupBy("bin").agg(count(lit(1)).as("n_ref"))
 
   /** Ranking audit: exact Mann–Whitney AUC of the trained scores
     * against the labels, with midrank tie handling — computed

@@ -380,9 +380,8 @@ object Curation extends graft.io.VersionChain {
   }
 
   /** Landed winnow-fingerprint index (doc_id, pos, fp) — the
-    * versioned-release form of the `text_winnow_fps` artifact; the
-    * streaming partial-copy gate (`DocStreams.partialCopyGate`)
-    * probes exactly this table. Stored as an fp-hash-bucketed
+    * versioned-release form of the `text_winnow_fps` artifact.
+    * Stored as an fp-hash-bucketed
     * [[graft.io.BucketedTable]]: fingerprints are PER-DOC independent
     * and a release only ever adds docs, so increments land as pure
     * delta appends (round 14 — before, every release truncate-loaded

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Pluggable source seam for the reference's network inputs
   * (SURVEY.md §2.1 S13-S16): web3 contract reads, etherscan lookups,
@@ -9,9 +8,8 @@ import org.apache.spark.sql.functions._
   * of daily on-chain observations; production impls wrap RPC
   * endpoints behind `mapPartitions` (bounded-concurrency batch calls
   * per partition), tests inject deterministic fixtures. The
-  * per-partition client calls compose with `Retry.withBackoff` and
-  * `TieredCache` (`sources/Adapters.scala`) for the reference's
-  * backoff and ABI-cache behavior (S14/S15).
+  * reference's backoff and ABI-cache behavior (S14/S15) belong to
+  * such an implementation's client, not to the engine.
   *
   * Schema: date, block, liquidity_rate (RAY-scaled), liquidity_index,
   * emission_per_second (wei), atoken_supply, plus whatever a strategy

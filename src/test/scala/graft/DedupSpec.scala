@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops._
@@ -21,12 +22,34 @@ class DedupSpec extends SparkSpec {
     try body finally spark.conf.unset("graft.cluster.collectEdgesMax")
   }
 
+  /** Independent (doc_id, b, key) band derivation with NO aggregation:
+    * the min-hash minimums run inside array HOFs over each doc's
+    * shingle array — same distinct 12-char shingles, same two salted
+    * digests, same four 8-hex windows, same band-pair md5 keys as
+    * `sigsFrom`+`bandsOf`, but no `groupBy(doc_id)` signature
+    * aggregate, so it shares no code path with the batch chain. */
+  private def mapSideBands(docs: DataFrame): DataFrame = {
+    def mh(j: Int): Column =
+      array_min(transform(col(s"d${j / 4}"),
+        dg => conv(dg.substr(lit((j % 4) * 8 + 1), lit(8)), 16, 10).cast("long")))
+    val bandKeys = array((0 until 4).map(b =>
+      md5(concat(mh(2 * b).cast("string"), lit("_"), mh(2 * b + 1).cast("string")))): _*)
+    docs
+      .where(length(col("text")) >= 12) // same short-doc guard as shingleTable
+      .select(col("doc_id"),
+        expr("array_distinct(transform(sequence(1, length(text) - 11), i -> substring(text, i, 12)))")
+          .as("shs"))
+      .select(col("doc_id"),
+        transform(col("shs"), s => md5(concat(lit("0|"), s))).as("d0"),
+        transform(col("shs"), s => md5(concat(lit("1|"), s))).as("d1"))
+      .select(col("doc_id"), posexplode(bandKeys).as(Seq("b", "key")))
+  }
+
   test("map-side band derivation matches the batch signature chain") {
-    // the streaming gate derives band keys per row (array HOFs, no
-    // groupBy); on a corpus where the bucket cap never fires (sf0.001)
-    // the batch capped-band artifact IS the full band table, so the
-    // two derivations must agree row-for-row
-    val mapSide = Dedup.mapSideBands(
+    // on a corpus where the bucket cap never fires (sf0.001) the batch
+    // capped-band artifact IS the full band table, so the batch chain
+    // and the per-row derivation above must agree row-for-row
+    val mapSide = mapSideBands(
       Tables.documents(spark, sf).select(col("doc_id"), col("text")))
     val batch = Dedup.cappedBandArtifact(spark, sf)
     assert(mapSide.count() > 0)

@@ -321,7 +321,7 @@ class OperatorsSpec extends SparkSpec {
     val batch = Text.cdcChunksDocs(docs)
       .select("doc_id", "chunk_idx", "n_toks", "start_pos", "sig")
     val pure = docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) => Text.cdcChunksOf(text).map(c => (id, c._1, c._2, c._3, c._4)) }
+      .flatMap { case (id, text) => OperatorsSpec.cdcChunksOf(text).map(c => (id, c._1, c._2, c._3, c._4)) }
       .toDF("doc_id", "chunk_idx", "n_toks", "start_pos", "sig")
     assert(batch.exceptAll(pure).count() === 0)
     assert(pure.exceptAll(batch).count() === 0)
@@ -1318,5 +1318,39 @@ class OperatorsSpec extends SparkSpec {
     assert(BigDecimal(auc.getDouble(2)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
       === bruteAuc)
     assert(auc.getDouble(2) > 0.5, "trained ranking must beat chance")
+  }
+}
+
+object OperatorsSpec {
+  /** One document's CDC chunks computed sequentially, without windows:
+    * the pure reference for [[Text.cdcChunksDocs]]. A cut follows any
+    * position >= 3 whose 4-token window's md5 prefix is 0 mod 64; the
+    * signature sums md5 slices of the chunk's tokens. Returns
+    * (chunk_idx, n_toks, start_pos, sig). Lives on the companion so
+    * the Dataset closure that calls it captures no spec instance. */
+  def cdcChunksOf(text: String): Seq[(Long, Long, Long, Long)] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def hex(s: String): String =
+      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val toks = text.split(" ", -1)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+    var chunk = 0L; var n = 0L; var start = 0L; var sig = 0L
+    for (pos <- toks.indices) {
+      val win4 = Seq(
+        if (pos >= 3) toks(pos - 3) else "",
+        if (pos >= 2) toks(pos - 2) else "",
+        if (pos >= 1) toks(pos - 1) else "",
+        toks(pos)).mkString(" ")
+      n += 1
+      sig += java.lang.Long.parseLong(hex(toks(pos)).substring(6, 14), 16)
+      val cut = pos >= 3 &&
+        java.lang.Long.parseLong(hex(win4).substring(0, 6), 16) % 64 == 0
+      if (cut) {
+        out += ((chunk, n, start, sig))
+        chunk += 1; n = 0; sig = 0; start = pos + 1L
+      }
+    }
+    if (n > 0) out += ((chunk, n, start, sig))
+    out.toSeq
   }
 }
