@@ -14,8 +14,8 @@ import graft.ops.IterState
   * This is the production posture, not a bench trick: a near-dup
   * index over a 100 TB corpus is built by the release pipeline and
   * READ by every downstream audit/apply/curation pass (the
-  * `pipelines.Curation`/`pipelines.AnnIndex` chains are the
-  * explicit, versioned form of the same thing); re-running the
+  * `pipelines.Curation` release chain is the explicit, versioned
+  * form of the same thing); re-running the
   * shingle→signature→band derivation inside every consumer is what
   * no real pipeline does. Within this process the first consumer
   * builds and lands the artifact as parquet under the iteration

@@ -57,22 +57,20 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** `events.parquet` has shipped `ts` in two physical encodings across
-    * testdata generations: TIMESTAMP(NANOS) (which Spark's vectorized
-    * reader only surfaces as raw longs via the legacy conf) and native
-    * TIMESTAMP(MICROS). Branch on the actual column type so both read
-    * identically: longs get the nanos→micros truncation (the same
-    * truncation DuckDB applies coercing nanos to its micros TIMESTAMP);
-    * native timestamps are cast to the session-TZ timestamp (UTC is
-    * pinned, so NTZ and session-TZ values coincide). */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
-    normalizeEventTs(raw)
-  }
+  /** `events.ts` as session-TZ TimestampType. The read leaves the
+    * caller's session confs untouched: every shipped input encodes
+    * `ts` as TIMESTAMP(MICROS), and a plain INT64 nanosecond count
+    * reads as a long without any legacy parquet conf. */
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeEventTs(load(s, d, "events"))
 
   /** Normalize an events frame's `ts` to session-TZ TimestampType,
-    * whatever the physical parquet encoding produced. */
+    * whatever the physical parquet encoding produced. Longs are
+    * nanoseconds and get the nanos→micros truncation (the same
+    * truncation DuckDB applies coercing nanos to its micros
+    * TIMESTAMP); native timestamps are cast to the session-TZ
+    * timestamp (UTC is pinned, so NTZ and session-TZ values
+    * coincide). */
   def normalizeEventTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

@@ -59,11 +59,7 @@ case class DotProduct(left: Expression, right: Expression)
 object VectorFunctions {
   /** Ensure `graft_dot` exists in `spark`'s registry (idempotent —
     * skipped when already there, e.g. injected via
-    * [[graft.GraftExtensions]]). A streaming query whose foreachBatch
-    * body plans dot products (`IndexStreams.maintainGate`) must call
-    * this BEFORE `.start()`: the micro-batch runs in a CLONED session
-    * that inherits the registry as of query start, and a registration
-    * made on the outer session mid-stream never reaches the clone. */
+    * [[graft.GraftExtensions]]). */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     if (!registry.functionExists(

@@ -3,10 +3,11 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bucket-partitioned, manifest-versioned parquet state — the storage
-  * layout that makes incremental index maintenance pay at scale
-  * (round-12 PERF.md named it: "bucket-partitioned round tables with
-  * partition-level overwrite would be the next step at billion-vector
-  * scale"). A version of a table is
+  * layout that lets a version of a large table land only the buckets
+  * its increment touches (round-12 PERF.md named it:
+  * "bucket-partitioned round tables with partition-level overwrite
+  * would be the next step at billion-vector scale"). A version of a
+  * table is
   *
   * ```
   * <path>/data/pb=<k>/part-*.parquet   locally-written buckets
@@ -19,8 +20,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * touched, and absolute references into ANCESTOR versions for
   * buckets it did not (references are stored pre-resolved, so chains
   * stay one hop deep no matter how many increments stack). An
-  * incremental writer therefore rewrites ONLY frontier-touched
-  * buckets; everything else is a manifest line. This is the
+  * incremental writer therefore rewrites ONLY the buckets its delta
+  * touches; everything else is a manifest line. This is the
   * shared-file posture of the table formats (an Iceberg/Delta
   * snapshot reuses unchanged data files and rewrites a manifest);
   * kept on Spark core the same way `Writers.mergeKeyed` keeps the
@@ -31,7 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * path would resolve against the session's default filesystem, which
   * on any non-default FS (s3a, scheme-qualified hdfs) is the wrong
   * one. The manifest also stamps the bucket-SCHEME identity (a caller
-  * id naming the key function + bit width, e.g. `navloc/6`): `pb` is a
+  * id naming the key function + bit width, e.g. `md5hash/6`): `pb` is a
   * derived function of the row, so pruning a table written under one
   * scheme with another's constants would silently drop rows —
   * [[readParts]] / [[writeSpliced]] / [[writeAppended]] therefore
@@ -51,12 +52,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directories, so deleting an ancestor version invalidates its
   * descendants — vacuuming this layout must keep every version a
   * retained manifest references (reference-counted vacuum, the same
-  * contract lake formats carry). The index pipelines here retire
-  * whole version CHAINS (or rebuild, which references nothing), so
-  * the simple rule "vacuum only below the oldest retained full
-  * build" suffices; [[compact]] is what re-opens that rule for an
-  * increment-only chain (it turns the tip into a self-contained
-  * anchor without recomputing anything).
+  * contract lake formats carry). The version chains here
+  * ([[VersionChain]]) keep the simpler rule "vacuum only below the
+  * newest retained self-contained version"; [[compact]] is what
+  * re-opens that rule for an increment-only chain (it turns the tip
+  * into a self-contained anchor without recomputing anything).
   *
   * Readers take an EXPLICIT schema: a manifest can resolve to zero
   * directories (an empty table) where inference has nothing to read,
@@ -207,7 +207,7 @@ object BucketedTable {
   /** Land an APPENDED version: `delta` rows (with `pb`) written
     * locally; every prior bucket stays referenced, and buckets the
     * delta lands in carry BOTH directory lists. Zero prior-data I/O —
-    * the pure-insert fast path (new vectors joining an index). The
+    * the pure-insert fast path (new rows joining the table). The
     * delta's bucket set is derived FIRST and passed as the expected
     * set, so a stale dir from a crashed foreign attempt cannot fold
     * into the manifest. */
@@ -455,23 +455,6 @@ object BucketedTable {
     * of the row, not stored data, so it does not reappear). */
   def read(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
     readDirs(spark, parts(spark, path).values.flatten.toSeq, schemaDdl)
-
-  /** [[read]] with each row's bucket id restored as an int `pb`
-    * column — a per-bucket union of literals, so the bucket id costs
-    * nothing to materialize and a projection that keeps only narrow
-    * columns never touches the wide payload (the node → bucket map an
-    * incremental splice joins on reads ONE slim column this way,
-    * instead of re-deriving buckets from the full vector payload). */
-  def readWithPb(spark: SparkSession, path: String, schemaDdl: String): DataFrame = {
-    val p = parts(spark, path)
-    if (p.isEmpty)
-      readDirs(spark, Seq.empty, schemaDdl)
-        .withColumn("pb", org.apache.spark.sql.functions.lit(0).cast("int"))
-    else p.toSeq.sortBy(_._1).map { case (k, dirs) =>
-      readDirs(spark, dirs, schemaDdl)
-        .withColumn("pb", org.apache.spark.sql.functions.lit(k))
-    }.reduce(_.unionByName(_))
-  }
 
   /** Read ONLY the given buckets — the partition-pruned scan an
     * incremental splice stands on (untouched buckets are never

@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The lifecycle of a chain of immutable versions `<root>/v<N>` of
-  * [[BucketedTable]] state, shared by the nav, ann and pq indexes and
-  * the curation release chain. An incremented version references
+  * [[BucketedTable]] state (the curation release chain,
+  * `pipelines.Curation`). An incremented version references
   * buckets of its ancestors by manifest, so deleting an old version
   * naively would tear every newer one. The rule:
   *

@@ -538,7 +538,7 @@ object Dedup {
     * keeper's cluster (the keeper itself when the keeper is unpaired)
     * with keep = false. The result reads exactly like the decision of
     * an ideal uncapped chain — every consumer of the LSH-only
-    * decision table (apply, curate, leak-free split, index retire)
+    * decision table (apply, curate, leak-free split, release)
     * works on it unchanged — while the expensive shingle/band chain
     * only ever scanned keepers. */
   private[graft] def augmentWithExactLosers(clusters: DataFrame, mapping: DataFrame): DataFrame = {

@@ -40,8 +40,8 @@ object Similarity {
     vecsOf(spark, Tables.embeddings(spark, dir))
 
   /** Same derivation over an EXPLICIT embeddings-format table
-    * (vec_id, embedding, label) — the seam the incremental ANN index
-    * (`pipelines.AnnIndex`) feeds corpus slices through. */
+    * (vec_id, embedding, label), for a caller holding a table rather
+    * than a corpus dir. */
   private[graft] def vecsOf(spark: SparkSession, emb: DataFrame): DataFrame = {
     val v = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("label"))
@@ -349,8 +349,8 @@ object Similarity {
     pqExplodeOf(Tables.embeddings(spark, dir), subDim)
 
   /** The exploded PQ view over an EXPLICIT embeddings-format table —
-    * the seam the incrementally-maintained PQ chain
-    * (`pipelines.PqIndex`) feeds corpus slices through. */
+    * the one view the codebook trainer ([[pqTrainOf]]) and the packed
+    * search codes ([[pqSearchCodesArt]]) both read. */
   private[graft] def pqExplodeOf(emb: DataFrame, subDim: Int): DataFrame =
     emb
       .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")).as(Seq("p", "x")))
@@ -392,8 +392,8 @@ object Similarity {
       k: Int): (DataFrame, () => Unit) = {
     val e = pqExplodeOf(emb, subDim).persist()
     e.count()
-    // seed rows are the k LOWEST ids (not `< k`: explicit corpus
-    // slices — the PQ chain's rebuild path — renumber nothing), with
+    // seed rows are the k LOWEST ids (not `< k`: an explicit table's
+    // ids need not start at 0), with
     // cid REMAPPED dense 0..k−1 so every downstream (sub·k + cid)
     // packing is collision-free on any id space; on 0-based corpora
     // this is bit-identical to the historical cid = vec_id seeding
@@ -436,9 +436,7 @@ object Similarity {
         pqSearchCodebookArt(spark, dir)))
 
   /** One assignment pass + sub-ordered packing: (vec_id, cids) — the
-    * contiguous per-vector code layout. Shared by the artifact path
-    * and the incrementally-maintained PQ chain (`pipelines.PqIndex`),
-    * so both produce bit-identical codes for the same codebook. */
+    * contiguous per-vector code layout [[pqSearchCodesArt]] lands. */
   private[graft] def pqEncodePacked(e: DataFrame, codebook: DataFrame): DataFrame =
     pqAssign(e, codebook)
       .groupBy("vec_id")
@@ -901,13 +899,13 @@ object Similarity {
     * ([[bitsFor]]) applied to the nav seed. Fixed 8-bit bands put
     * EVERY bucket over [[NavBucketCap]] on a ×100 corpus and the cap
     * evicted the whole seed (measured: empty graph at 200k vectors,
-    * PERF.md round 11). Deterministic in n, so any engine (and
-    * the incremental maintainer) derives the same width; at 8 bits
+    * PERF.md round 11). Deterministic in n, so any engine derives
+    * the same width; at 8 bits
     * the band layout is identical to the historical one, so the
     * oracle — which pins the driver scales, where bits = 8 — is
-    * unchanged. Crossing a width boundary re-buckets every seed; a
-    * release that grows past one needs a full rebuild
-    * (`NavIndex.incrementState` enforces this). */
+    * unchanged. Crossing a width boundary re-buckets every seed, so
+    * a graph whose corpus grows past one must be rebuilt in full,
+    * never spliced. */
   private[graft] def navBitsFor(n: Long): Int = {
     var bits = 8
     while (bits < 16 && (n >> bits) > 8) bits += 1
@@ -1031,11 +1029,6 @@ object Similarity {
     *     per-bucket sort or window — a mega-bucket costs width × ~16
     *     map-side rows, never width² and never a single-task sort).
     *
-    * `restrict` (column `node`) limits the NODE side — the
-    * incremental maintainer re-ranks only delta-touched buckets'
-    * members; a node's pair set is a pure function of its buckets'
-    * membership, so restriction commutes with generation.
-    *
     * Why anchors instead of dropping wide buckets (the pre-round-11
     * rule): on a clustered corpus the bucket-width distribution is
     * heavy-tailed — the densest regions blow past any cap on EVERY
@@ -1046,25 +1039,13 @@ object Similarity {
     * drop → 31% seed-isolated nodes, 9.4 edges/node, walk recall
     * 11/30 at 200k; anchors → 0 isolated, 30/30 in the 50k
     * simulation that chose this rule. */
-  private[graft] def navSeedPairs(bands: DataFrame, keyCols: Seq[String],
-      restrict: Option[DataFrame] = None,
-      stats: Option[DataFrame] = None): DataFrame = {
+  private[graft] def navSeedPairs(bands: DataFrame, keyCols: Seq[String]): DataFrame = {
     val keys = keyCols.map(col)
-    // `stats` (keyCols + bn, a0) lets a maintainer hand in the LANDED
-    // per-bucket width table instead of re-aggregating the full band
-    // table every call — the caller guarantees it equals the derived
-    // aggregate (the versioned-state contract `NavIndex` keeps; parity
-    // specs pin the equality through every maintenance path)
-    val st = stats.map(_.select((keys :+ col("bn").as("_bn")) :+ col("a0").as("_a0"): _*))
-      .getOrElse(bands.groupBy(keys: _*)
-        .agg(count(lit(1)).as("_bn"), min("vec_id").as("_a0")))
+    val st = bands.groupBy(keys: _*)
+      .agg(count(lit(1)).as("_bn"), min("vec_id").as("_a0"))
     val tagged = bands.join(st, keyCols)
-    val nodeSide0 = tagged.select(
+    val nodeSide = tagged.select(
       (col("vec_id").as("node") +: (keys :+ col("_bn"))): _*)
-    val nodeSide = restrict match {
-      case Some(r) => nodeSide0.join(r, Seq("node"), "left_semi")
-      case None    => nodeSide0
-    }
     val inCapNbr = tagged.where(col("_bn") <= NavBucketCap)
       .select((col("vec_id").as("nbr_id") +: keys): _*)
     val allPairs = nodeSide.where(col("_bn") <= NavBucketCap)
@@ -1086,12 +1067,12 @@ object Similarity {
     * width is QUANTIZED to its power-of-two ceiling (round 12) so the
     * verdict is STABLE under within-band growth: before, the
     * threshold moved with every +1 of width, so ONE vector landing in
-    * an over-cap bucket changed every member's anchor verdict and the
-    * exactness contract forced `NavIndex.incrementState` to re-rank
-    * the whole bucket — measured at ×100 as a 1% increment costing
-    * MORE than a warm full rebuild (PERF.md round 12). Quantized,
-    * growth inside a power-of-two band adds pairs without revoking
-    * any, which is what makes the seed round GROW-SPLICEABLE.
+    * an over-cap bucket changed every member's anchor verdict, and an
+    * exact incremental build had to re-rank the whole bucket —
+    * measured at ×100 as a 1% increment costing MORE than a warm full
+    * rebuild (PERF.md round 12). Quantized, growth inside a
+    * power-of-two band adds pairs without revoking any, which is what
+    * keeps the seed round GROW-SPLICEABLE.
     * The ceiling is computed ARITHMETICALLY ([[navPow2CeilBits]], the
     * bit length of bn−1) rather than ceil(log2(bn)): Spark's log2 is
     * ln(x)/ln(2), which lands a hair ABOVE the integer at bn = 2^29,
@@ -1108,12 +1089,9 @@ object Similarity {
     * the bit-length form alone gets wrong — `length(conv(0,10,2))` is
     * 1), else the bit length of bn − 1 (binary-string length via
     * `conv`) — pure integer arithmetic any engine reproduces; see
-    * [[navAnchorPred]] for why float log2 is not safe here. Shared by
-    * the anchor verdict and `NavIndex.incrementState`'s grow-bucket
-    * classification, which must quantize identically or the splice
-    * would carry edges whose anchor rule moved. (Every consulted
-    * width today is > [[NavBucketCap]], so the bn = 1 case is
-    * unreachable from current call sites — fixed so the function
+    * [[navAnchorPred]] for why float log2 is not safe here. (Every
+    * consulted width today is > [[NavBucketCap]], so the bn = 1 case
+    * is unreachable from current call sites — fixed so the function
     * matches its ceil-log2 contract everywhere.) */
   private[graft] def navPow2CeilBits(bn: Column): Column =
     when(bn <= 1, lit(0)).otherwise(length(conv(bn - 1, 10, 2)))
@@ -1147,14 +1125,10 @@ object Similarity {
     * top-[[NavDegree]] per node by 6-dp cosine (nbr-id tiebreak) —
     * the one scoring rule every nav-graph stage shares. Identical
     * rows at every tier; only the join strategy changes. `n` is the
-    * row count of `v`, threaded from the caller (a build/increment
-    * session counts its vector table ONCE and reuses the size across
-    * every round's call — an unlanded `v` plan would otherwise
-    * recompute per invocation); the no-`n` overload counts for
-    * one-off callers. */
-  private[graft] def navTopK(spark: SparkSession, v: DataFrame, cand: DataFrame): DataFrame =
-    navTopK(spark, v, cand, v.count())
-
+    * row count of `v`, threaded from the caller (a build session
+    * counts its vector table ONCE and reuses the size across every
+    * round's call — an unlanded `v` plan would otherwise recompute
+    * per invocation). */
   private[graft] def navTopK(spark: SparkSession, v: DataFrame, cand: DataFrame,
       n: Long): DataFrame = {
     def d(a: Column, b: Column) = VectorFunctions.dot(spark, a, b)
@@ -2131,15 +2105,12 @@ object Similarity {
 
   /** The IVF re-tune ladder: sign-bit split depth for a cell/label of
     * width cn (doc at `knnGraph`). Deterministic in cn, so any engine
-    * (and any incremental maintenance pass) derives the same tiers. */
+    * derives the same tiers. */
   private[graft] def bitsFor(cn: Column): Column =
     when(cn > 32000, 9).when(cn > 4000, 6).when(cn > 500, 3).otherwise(0)
 
   /** Cell assignment for vectors against an explicit per-label width
-    * table: cell = label + first-`bits` hyperplane-sign characters.
-    * Split out of `knnGraphReleasable` so the incremental index
-    * assigns delta vectors (and re-assigns tier-crossing labels) with
-    * EXACTLY the rule the full build uses. */
+    * table: cell = label + first-`bits` hyperplane-sign characters. */
   private[graft] def assignCells(v0: DataFrame, widths: DataFrame): DataFrame = {
     val sig9 = concat((1 to 9).map(i =>
       when(element_at(col("v"), i) >= 0, "1").otherwise("0")): _*)
@@ -2152,8 +2123,7 @@ object Similarity {
   /** The per-cell self-join → top-3-per-vector edge derivation over an
     * already-materialized cell table (cell, vec_id, v, norm).
     * Deterministic given cell membership (6-dp cos, nbr_id tiebreak),
-    * which is what makes incremental re-pairing of ONLY touched cells
-    * row-identical to a full rebuild. */
+    * so a re-run lands the same edges row for row. */
   private[graft] def pairCells(spark: SparkSession, v: DataFrame): DataFrame = {
     def d(a: Column, b: Column) = VectorFunctions.dot(spark, a, b)
     val a = v.select(col("cell"), col("vec_id"), col("v"), col("norm"))

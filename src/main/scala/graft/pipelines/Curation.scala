@@ -78,10 +78,10 @@ object Curation extends graft.io.VersionChain {
   private[graft] val ExactSchema = "doc_id BIGINT, keeper_id BIGINT, h STRING"
 
   /** Bucket-key width of the exact keeper mapping: 2^6 = 64
-    * content-hash buckets — the same grain as `NavIndex.PartBits` /
-    * `AnnIndex.PartBits`, named here so the three tables' bucket
-    * schemes cannot silently drift apart in a future edit (the
-    * hardcoded `lit(64)` the round-13 advice flagged). */
+    * content-hash buckets, shared with the winnow index
+    * ([[WinnowScheme]]) so the two tables' bucket schemes cannot
+    * silently drift apart in a future edit (the hardcoded `lit(64)`
+    * the round-13 advice flagged). */
   private[graft] val ExactPartBits = 6
 
   /** Bucket-scheme id of the exact keeper mapping's manifests:
@@ -93,11 +93,10 @@ object Curation extends graft.io.VersionChain {
     * APPENDS to it (keeper demotion REFUSES toward the rebuild
     * escape hatch) — so it is stored as a content-hash-bucketed
     * [[graft.io.BucketedTable]] and each increment lands ONLY the
-    * delta's rows, referencing every prior bucket by manifest (the
-    * round-13 `NavIndex`/`AnnIndex` storage discipline; before, every
-    * release truncate-loaded the whole mapping). Read it through
-    * [[exactMap]]; a raw parquet read of an incremented version sees
-    * only that version's delta. */
+    * delta's rows, referencing every prior bucket by manifest
+    * (before, every release truncate-loaded the whole mapping). Read
+    * it through [[exactMap]]; a raw parquet read of an incremented
+    * version sees only that version's delta. */
   def exactMap(spark: SparkSession, root: String): DataFrame =
     graft.io.BucketedTable.read(spark, exactPath(root), ExactSchema)
 
@@ -157,7 +156,7 @@ object Curation extends graft.io.VersionChain {
 
   /** The COMPOSED per-doc dedup decision of the state under `root` —
     * the uniform (doc_id, cluster_id, keep) table every consumer
-    * (apply, curate, leak-free split, index retire) reads. For an
+    * (apply, curate, leak-free split, release) reads. For an
     * exact-first state this composes the landed fuzzy decision with
     * the exact mapping on read (`Dedup.augmentWithExactLosers` — one
     * join against the keeper-only fuzzy table, which broadcasts); a
@@ -194,7 +193,7 @@ object Curation extends graft.io.VersionChain {
     * row per exact loser carrying its keeper's cluster) is a READ
     * VIEW ([[decision]], `Dedup.augmentWithExactLosers`): it reads
     * exactly like an LSH decision table, so every downstream consumer
-    * (apply, curate, leak-free split, release, index retire) works
+    * (apply, curate, leak-free split, release) works
     * unchanged — and no release ever writes the corpus-sized composed
     * table (round 14). The `dedup_exact_first` driver query pins the
     * same composition against the DuckDB oracle.
@@ -266,8 +265,7 @@ object Curation extends graft.io.VersionChain {
     * 100 TB form of this probe); docs matching a prior group are
     * absorbed as exact losers (mapping rows only — no fuzzy work at
     * all), and only NEW-group keepers enter the fuzzy chain. One
-    * contract REFUSE, mirroring `NavIndex.incrementState`'s
-    * width-boundary refuse: a delta doc with an id BELOW its group's
+    * contract REFUSE: a delta doc with an id BELOW its group's
     * landed keeper would demote the keeper, and a demotion is a
     * deletion from the fuzzy state — which only a full
     * [[buildStateExactFirst]] rebuild can honor. Release ids are
@@ -343,26 +341,6 @@ object Curation extends graft.io.VersionChain {
       st.release()
       stampFuzzyLayout(spark, nextRoot)
     }
-  }
-
-  /** CURATION → INDEX composition: retire every doc the dedup
-    * decision under `curationRoot` DROPPED from an already-built
-    * navigable-graph index — the operational form of the scale
-    * lesson the ×100 harness measured ("near-dup dedup before
-    * indexing", PERF.md rounds 10–11): when the index PREDATES the
-    * curation pass, the drop set flows through
-    * [[NavIndex.retireState]] as a delta-cost physical delete instead
-    * of a full rebuild over the kept corpus. Ids are shared across
-    * the documents/embeddings tables (the filtered-search contract);
-    * dropped docs with no embedding are ignored by the retire. The
-    * result is row-identical to building the index on the kept
-    * corpus (`PipelineSpec`). */
-  def retireDropped(spark: SparkSession, curationRoot: String,
-      priorIndexRoot: String, nextIndexRoot: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val dropped = decision(spark, curationRoot)
-      .where(!col("keep")).select(col("doc_id").as("vec_id"))
-    graft.pipelines.NavIndex.retireState(spark, dropped, priorIndexRoot, nextIndexRoot)
   }
 
   def winnowPath(root: String): String = s"$root/winnow_fps"

@@ -274,6 +274,17 @@ class OperatorsSpec extends SparkSpec {
     assert(tot === 4000L)
   }
 
+  test("reading events leaves the caller's session confs as they were") {
+    // a loader must not flip a session-wide parquet conf under every
+    // later read of the same session
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    val before = spark.conf.getOption(key)
+    val ev = Tables.events(spark, sf)
+    assert(spark.conf.getOption(key) === before)
+    assert(ev.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
+  }
+
   test("quantile sketch estimates bracket the exact rank elements") {
     import graft.ops.Events
     val v = Tables.events(spark, sf)

@@ -8,13 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Locks the program's configuration surface, the exact `graft.*`
   * conf keys and environment variables `src/main` reads, the single
-  * home of the version-chain lifecycle, and the roots every main
-  * source file must be reachable from. A new option fails the
-  * suite until the change adds it here, visibly, with the reason it
-  * cannot be a constant (the `PlanAuditSpec` inventory posture,
-  * applied to knobs); a second copy of the lifecycle fails it the same
-  * way. Scans the sources, so a read or call on a rarely-run path is
-  * still counted. */
+  * home of the version-chain lifecycle, the absence of streaming, and
+  * the roots every main source file must be reachable from. A new
+  * option fails the suite until the change adds it here, visibly,
+  * with the reason it cannot be a constant (the `PlanAuditSpec`
+  * inventory posture, applied to knobs); a second copy of the
+  * lifecycle fails it the same way. Scans the sources, so a read or
+  * call on a rarely-run path is still counted. */
 class OptionsInventorySpec extends AnyFunSuite {
 
   /** Every conf key the program reads, with what it is for. */
@@ -50,12 +50,6 @@ class OptionsInventorySpec extends AnyFunSuite {
   private val seams = Map(
     "GraftExtensions.scala" -> "loaded by name through spark.sql.extensions",
     "CachePolicy.scala" -> "documentation anchor with no code; the persist() sites cite it")
-
-  /** Files no root reaches yet, each with the change that roots or
-    * deletes it. */
-  private val awaitingRoot = Map(
-    "pipelines/AnnIndex.scala" -> "index chains: ROADMAP item 4, part 2, after item 3",
-    "pipelines/PqIndex.scala" -> "index chains: ROADMAP item 4, part 2, after item 3")
 
   /** A comment, or in group 1 a string or char literal. */
   private val commentOrLiteral =
@@ -118,24 +112,23 @@ class OptionsInventorySpec extends AnyFunSuite {
     assert(benchRoots.contains("io/Writers.scala"))
     val codeRoots = Set("SparkEntry.scala", "Verify.scala") ++ benchRoots
     assert(codeRoots.subsetOf(code.keySet))
-    // both ways: every entry names a file; a seam is reached by no
-    // code root, and a file awaiting its root by no root at all
-    assert((seams.keySet ++ awaitingRoot.keySet).subsetOf(code.keySet))
+    // both ways: every seam names a file that no code root reaches
+    assert(seams.keySet.subsetOf(code.keySet))
     assert(closure(codeRoots).intersect(seams.keySet).isEmpty)
     val unreached = code.keySet -- closure(codeRoots ++ seams.keySet)
-    assert(unreached === awaitingRoot.keySet)
+    assert(unreached.isEmpty)
   }
 
-  test("the version-chain lifecycle and the maintenance gate each have one home") {
+  test("the version-chain lifecycle has one home, and src/main runs no stream") {
     val files = mainFiles.filterNot(_._1 == "io/BucketedTable.scala")
     def callers(call: String): Set[String] =
       files.filter(_._2.contains(call)).map(_._1).toSet
     for (call <- Seq("BucketedTable.compact(", "isSelfContainedIfCommitted(",
         "BucketedTable.referencedDirs(", "BucketedTable.sweepOrphans("))
       assert(callers(call) === Set("io/VersionChain.scala"), call)
-    val gate = files.collect { case ("streaming/IndexStreams.scala", src) =>
-      "\\.foreachBatch".r.findAllMatchIn(src).size }
-    assert(gate === Seq(1))
-    assert(files.count(_._2.contains("vs.contains(batchId)")) === 1)
+    // the program is a batch DAG: no Structured Streaming anywhere
+    for (api <- Seq("org.apache.spark.sql.streaming", "readStream",
+        "writeStream", "foreachBatch"))
+      assert(mainFiles.filter(_._2.contains(api)).map(_._1).isEmpty, api)
   }
 }

@@ -18,20 +18,6 @@ class FakeS3LocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 class PipelineSpec extends SparkSpec {
 
-  /** Every landed nav-index table of a version, via the committed-
-    * version readers (raw parquet reads cannot see an incremented
-    * version's referenced buckets). */
-  private def navTables(root: String): Seq[(String, org.apache.spark.sql.DataFrame)] = {
-    import graft.pipelines.NavIndex
-    Seq("vecs" -> NavIndex.readVecs(spark, root),
-      "graph" -> NavIndex.graph(spark, root),
-      // the round-14 versioned band state is parity-checked like any
-      // other table: maintained counts must equal the full re-derive
-      "bands" -> NavIndex.bands(spark, root),
-      "bstats" -> NavIndex.bstats(spark, root)) ++
-      (0 to 2).map(r => s"e$r" -> NavIndex.round(spark, root, r))
-  }
-
   private def prices(start: String, days: Int, base: Double) = {
     import spark.implicits._
     spark.sql(
@@ -744,6 +730,111 @@ class PipelineSpec extends SparkSpec {
     assert(Curation.committedVersions(spark, chain) === Seq(2L, 3L),
       "a winnow-less tip must not let vacuum delete the winnow-bearing ancestor")
     assert(Curation.winnowIndex(spark, vr(2)).collect().toSet === wantWinnow)
+    // a version missing a state table's manifest (an earlier layout or
+    // a torn landing) is not an anchor, never an error: vacuum scans
+    // every retained version through the anchor rule and must refuse
+    // toward the next rebuild instead of crashing the scan
+    fs.delete(new org.apache.hadoop.fs.Path(s"${Curation.winnowPath(vr(2))}/_parts"), false)
+    assert(Curation.committedVersions(spark, chain) === Seq(2L, 3L))
+    assert(!Curation.isAnchor(spark, vr(2)))
+    Curation.vacuum(spark, chain, 1)
+    assert(Curation.committedVersions(spark, chain) === Seq(2L, 3L))
+  }
+
+  test("version-chain vacuum reclaims only below the newest retained anchor") {
+    // the retention rule on the winnow-only release chain: vacuum keeps
+    // the newest keepLast versions plus everything down to the newest
+    // anchor at or below the oldest kept one, because the kept
+    // increments read that anchor's buckets through their manifests
+    import graft.pipelines.Curation
+    val docs = Tables.documents(spark, sf)
+    def part(i: Int) = docs.where(col("doc_id") % 6 === i)
+    val chain = Files.createTempDirectory("graft_vac_anchor").toString
+    def vr(b: Int) = s"$chain/v$b"
+    Curation.buildWinnowIndex(spark, part(0), vr(0))
+    Curation.incrementWinnowIndex(spark, part(1), vr(0), vr(1))
+    Curation.compactTip(spark, chain)
+    for (i <- 2 to 3) Curation.incrementWinnowIndex(spark, part(i), vr(i - 1), vr(i))
+    assert((0 to 3).map(b => Curation.isAnchor(spark, vr(b))) ===
+      Seq(true, true, false, false))
+    // keep 2 -> the oldest kept v2 is no anchor; the newest anchor at
+    // or below it is v1, so only v0 is reclaimed
+    Curation.vacuum(spark, chain, 2)
+    assert(Curation.committedVersions(spark, chain) === Seq(1L, 2L, 3L))
+    // the kept tip still resolves, equal to a one-shot build over
+    // everything it absorbed
+    val ref = Files.createTempDirectory("graft_vac_anchor_ref").toString
+    Curation.buildWinnowIndex(spark, docs.where(col("doc_id") % 6 < 4), ref)
+    val got = Curation.winnowIndex(spark, vr(3))
+    val want = Curation.winnowIndex(spark, ref)
+    assert(got.exceptAll(want).count() === 0)
+    assert(want.exceptAll(got).count() === 0)
+    // grow with increments only: a kept window of increments must NOT
+    // reclaim the anchor they resolve through (safety wins)
+    for (i <- 4 to 5) Curation.incrementWinnowIndex(spark, part(i), vr(i - 1), vr(i))
+    Curation.vacuum(spark, chain, 2)
+    assert(Curation.committedVersions(spark, chain) === Seq(1L, 2L, 3L, 4L, 5L))
+    assert(Curation.winnowIndex(spark, vr(5)).count() > want.count())
+  }
+
+  test("vacuum sweeps crashed-compact orphans inside retained versions") {
+    import graft.pipelines.Curation
+    import graft.io.BucketedTable
+    val docs = Tables.documents(spark, sf)
+    val chain = Files.createTempDirectory("graft_sweep_chain").toString
+    def vr(b: Int) = s"$chain/v$b"
+    // a one-doc increment touches few of the 64 buckets, so the tip
+    // has free local bucket slots
+    Curation.buildWinnowIndex(spark, docs.where(col("doc_id") < 499), vr(0))
+    Curation.incrementWinnowIndex(spark, docs.where(col("doc_id") === 499), vr(0), vr(1))
+    val tip = Curation.winnowPath(vr(1))
+    val fs = new org.apache.hadoop.fs.Path(chain)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def mkOrphan(dir: String): org.apache.hadoop.fs.Path = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      fs.mkdirs(p)
+      val out = fs.create(new org.apache.hadoop.fs.Path(p, "part-00000.parquet"), true)
+      try out.write(Array[Byte](1, 2, 3)) finally out.close()
+      p
+    }
+    // crash-simulated partial compact: a full generation dir no
+    // manifest references, plus a stale local bucket a crashed
+    // foreign append attempt left outside the expected set
+    val orphanGen = mkOrphan(s"$tip/cdata1/pb=0")
+    mkOrphan(s"$tip/cdata1/pb=1")
+    // a stale LOCAL bucket must go into a pb slot the manifest does
+    // not reference (writing into a live dir would corrupt the table,
+    // which is not the crash mode the expected-set filter leaves)
+    val usedLocal = BucketedTable.referencedDirs(spark, tip)
+      .filter(_.contains(s"$tip/data/pb=")).map(_.split("/data/pb=").last.toInt)
+    val freePb = (0 until 64).find(k => !usedLocal.contains(k)).get
+    val orphanStale = mkOrphan(s"$tip/data/pb=$freePb")
+    assert(!BucketedTable.referencedDirs(spark, tip).exists(_.endsWith("/cdata1/pb=0")))
+    val before = Curation.winnowIndex(spark, vr(1)).collect().toSet
+    val liveDirs = (0 to 1).flatMap(b => Curation.referencedDirs(spark, vr(b))).toSet
+    // under the DEFAULT horizon the freshly-written dirs look like a
+    // concurrent writer's in-flight write — the fence must keep the
+    // sweep's hands off them
+    Curation.vacuum(spark, chain, 2)
+    assert(fs.exists(orphanGen) && fs.exists(orphanStale),
+      "young orphans must survive the default concurrent-maintenance horizon")
+    // this single-writer test just created them, so drop the horizon
+    spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
+    try Curation.vacuum(spark, chain, 2)
+    finally spark.conf.unset("graft.vacuum.orphanMinAgeMs")
+    // both retained versions survive; orphans are gone, the emptied
+    // cdata1 generation slot is freed whole
+    assert(Curation.committedVersions(spark, chain) === Seq(0L, 1L))
+    assert(!fs.exists(orphanGen))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tip/cdata1")))
+    assert(!fs.exists(orphanStale))
+    // every referenced directory is untouched and reads are identical
+    liveDirs.foreach(d => assert(fs.exists(new org.apache.hadoop.fs.Path(d))))
+    assert(Curation.winnowIndex(spark, vr(1)).collect().toSet === before)
+    // a later real compact reuses the swept cdata1 slot and anchors
+    Curation.compactTip(spark, chain)
+    assert(Curation.isAnchor(spark, vr(1)))
+    assert(Curation.winnowIndex(spark, vr(1)).collect().toSet === before)
   }
 
   test("orphan sweep refuses on object-store schemes without the explicit opt-in") {
@@ -789,169 +880,55 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.unset("graft.vacuum.orphanMinAgeMs")
   }
 
-  test("ann release chain: compact anchors the tip, vacuum reclaims below and sweeps orphans") {
-    // the round-15 gap: the ann chain had isAnchor + compactState but
-    // no retention entry point — this is the curation/nav lifecycle
-    // applied to the third chain through the same VersionChain rule
-    import graft.pipelines.AnnIndex
-    val emb = Tables.embeddings(spark, sf)
-    val chain = Files.createTempDirectory("graft_annvac").toString
-    def vr(b: Int) = s"$chain/v$b"
-    // LABEL-grain deltas (the "new content domain arrives" release
-    // regime the bucket splice is built for): an id-uniform split
-    // would touch every label and rewrite every bucket, leaving no
-    // ancestor references for retention to be careful about
-    AnnIndex.buildState(spark, emb.where(col("label") < 8), vr(0))
-    for (i <- 1 to 2)
-      AnnIndex.incrementState(spark, emb.where(col("label") === 7 + i),
-        vr(i - 1), vr(i))
-    assert(AnnIndex.committedVersions(spark, chain) === Seq(0L, 1L, 2L))
-    // a freshly-incremented tip references ancestors — not an anchor,
-    // so vacuum refuses to reclaim past it (safety over reclamation)
-    assert(!AnnIndex.isAnchor(spark, vr(2)))
-    val wantGraph = AnnIndex.graph(spark, vr(2)).collect().toSeq
-    val wantCells = AnnIndex.cells(spark, vr(2)).collect().toSet
-    AnnIndex.vacuum(spark, chain, 1)
-    assert(AnnIndex.committedVersions(spark, chain) === Seq(0L, 1L, 2L))
-    // crash-simulated partial compact: an orphan generation no
-    // manifest references, inside the RETAINED tip
-    val orphan = new org.apache.hadoop.fs.Path(
-      s"${AnnIndex.cellsPath(vr(2))}/cdata7/pb=0")
-    val fs = orphan.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(orphan)
-    val out = fs.create(new org.apache.hadoop.fs.Path(orphan, "part-0.parquet"), true)
-    try out.write(Array[Byte](9, 9)) finally out.close()
-    // compact anchors the tip; the same vacuum then reclaims v0/v1
-    // whole AND sweeps the orphan generation inside v2
-    AnnIndex.compactTip(spark, chain)
-    assert(AnnIndex.isAnchor(spark, vr(2)))
-    spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
-    try AnnIndex.vacuum(spark, chain, 1)
-    finally spark.conf.unset("graft.vacuum.orphanMinAgeMs")
-    assert(AnnIndex.committedVersions(spark, chain) === Seq(2L))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"${AnnIndex.cellsPath(vr(2))}/cdata7")))
-    assert(AnnIndex.graph(spark, vr(2)).collect().toSeq === wantGraph)
-    assert(AnnIndex.cells(spark, vr(2)).collect().toSet === wantCells)
-  }
-
   test("increment-only chain self-compacts past the version threshold, then reclaims") {
     // an operator who only ever increments never lands an anchor, so
     // vacuum alone refuses forever and versions accumulate without
     // bound. The VersionChain trigger (graft.chain.autoCompactVersions)
     // must compact the tip inside vacuum once the anchorless run is
-    // long enough, on every chain: no explicit compactTip call
-    // anywhere in this test.
-    import graft.io.VersionChain
-    import graft.pipelines.{AnnIndex, Curation, NavIndex, PqIndex}
+    // long enough: no explicit compactTip call anywhere in this test.
+    import graft.pipelines.Curation
     import org.apache.spark.sql.{DataFrame, Row}
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sf)
     val docs = Tables.documents(spark, sf)
     // id-range slices: v0 holds ids below 300, increment i the next
     // 50, so release ids stay monotone (no curation keeper demotion)
-    def slice(df: DataFrame, id: String, i: Int): DataFrame =
-      if (i == 0) df.where(col(id) < 300)
-      else df.where(col(id) >= 250 + 50 * i && col(id) < 300 + 50 * i)
-    // nav: two sign-separable regions, every delta in region A, so the
-    // increments stay localized and inside one seed-band width
-    def vecA(id: Long) = Array.tabulate(64)(i => 1.0 + 0.001 * ((id * 7 + i) % 5))
-    def vecB(id: Long) = Array.tabulate(64)(i =>
-      if (i % 2 == 0) 1.0 + 0.001 * ((id * 11 + i) % 5) else -1.0 - 0.001 * ((id * 3 + i) % 5))
-    def dfA(lo: Long, hi: Long) = (lo until hi).map(i => (i, vecA(i), 1L))
-      .toDF("vec_id", "embedding", "label")
-    val navBase = ((0L until 30L).map(i => (i, vecA(i), 1L)) ++
-      (100L until 280L).map(i => (i, vecB(i), 2L)))
-      .toDF("vec_id", "embedding", "label")
+    def slice(i: Int): DataFrame =
+      if (i == 0) docs.where(col("doc_id") < 300)
+      else docs.where(col("doc_id") >= 250 + 50 * i && col("doc_id") < 300 + 50 * i)
     def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
-    case class Script(name: String, chain: VersionChain, build: String => Unit,
-        increment: (Int, String, String) => Unit, rows: String => Seq[Row])
-    val scripts = Seq(
-      // LABEL-grain deltas: the "new content domain arrives" regime
-      // the ann bucket splice is built for
-      Script("ann", AnnIndex,
-        AnnIndex.buildState(spark, emb.where(col("label") < 6), _),
-        (i, p, n) => AnnIndex.incrementState(spark, emb.where(col("label") === 5 + i), p, n),
-        vr => AnnIndex.graph(spark, vr).collect().toSeq),
-      // incrementState directly: the streaming maintainer's frontier
-      // routing could land an anchor early
-      Script("nav", NavIndex,
-        NavIndex.buildState(spark, navBase, _),
-        (i, p, n) => NavIndex.incrementState(spark, dfA(20 + 10 * i, 30 + 10 * i), p, n),
-        vr => sorted(NavIndex.graph(spark, vr))),
-      Script("pq", PqIndex,
-        PqIndex.buildState(spark, slice(emb, "vec_id", 0), _),
-        (i, p, n) => PqIndex.incrementState(spark, slice(emb, "vec_id", i), p, n),
-        vr => sorted(PqIndex.codes(spark, vr))),
-      Script("curation", Curation,
-        vr => {
-          Curation.buildStateExactFirst(spark, slice(docs, "doc_id", 0), vr)
-          Curation.buildWinnowIndex(spark, slice(docs, "doc_id", 0), vr)
-        },
-        (i, p, n) => {
-          Curation.incrementState(spark, slice(docs, "doc_id", i), p, n)
-          Curation.incrementWinnowIndex(spark, slice(docs, "doc_id", i), p, n)
-        },
-        vr => sorted(Curation.decision(spark, vr)) ++ sorted(Curation.winnowIndex(spark, vr))))
-    for (sc <- scripts) withClue(s"${sc.name} chain: ") {
-      val chain = Files.createTempDirectory(s"graft_auto_${sc.name}").toString
-      def vr(b: Int) = s"$chain/v$b"
-      sc.build(vr(0))
-      for (i <- 1 to 3) sc.increment(i, vr(i - 1), vr(i))
-      val want = sc.rows(vr(3))
-      // below the threshold: vacuum refuses (v0 is the build anchor but
-      // the kept window holds only the anchorless tip) and does NOT
-      // auto-compact — 3 versions since the v0 anchor < threshold 4
-      spark.conf.set("graft.chain.autoCompactVersions", "4")
-      spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
-      try {
-        sc.chain.vacuum(spark, chain, 1)
-        assert(sc.chain.committedVersions(spark, chain) === Seq(0L, 1L, 2L, 3L))
-        assert(!sc.chain.isAnchor(spark, vr(3)))
-        // one more increment crosses the threshold: the SAME vacuum call
-        // self-compacts the tip, then reclaims everything below it
-        sc.increment(4, vr(3), vr(4))
-        val want4 = sc.rows(vr(4))
-        sc.chain.vacuum(spark, chain, 1)
-        assert(sc.chain.committedVersions(spark, chain) === Seq(4L))
-        assert(sc.chain.isAnchor(spark, vr(4)))
-        assert(sc.rows(vr(4)) === want4)
-      } finally {
-        spark.conf.unset("graft.chain.autoCompactVersions")
-        spark.conf.unset("graft.vacuum.orphanMinAgeMs")
-      }
-      assert(want.nonEmpty) // the pre-reclaim reference really had rows
+    def increment(i: Int, p: String, n: String): Unit = {
+      Curation.incrementState(spark, slice(i), p, n)
+      Curation.incrementWinnowIndex(spark, slice(i), p, n)
     }
-  }
-
-  test("warm rebuild REPLACES re-submitted vec_ids (re-embedding sweep)") {
-    // the ADVICE gap: rebuildState unioned prior ∪ delta without id
-    // disjointness, so the exact delta shape the label-routing sends
-    // to rebuild — a uniform re-embedding sweep re-submitting every
-    // id with new vectors — would silently index both embeddings.
-    import graft.pipelines.AnnIndex
-    import spark.implicits._
-    def df(ids: Range, shift: Double) = ids
-      .map(i => (i.toLong, Array.tabulate(64)(j => shift + 0.001 * ((i * 7 + j) % 5)),
-        1L + i % 3))
-      .toDF("vec_id", "embedding", "label")
-    val v0 = Files.createTempDirectory("graft_rebuild_v0").toString
-    val v1 = Files.createTempDirectory("graft_rebuild_v1").toString
-    AnnIndex.buildState(spark, df(0 until 40, 0.1), v0)
-    // re-embed ALL 40 ids (new geometry) + 5 genuinely new ids
-    val sweep = df(0 until 45, 0.9)
-    AnnIndex.rebuildState(spark, sweep, v0, v1)
-    val cells = AnnIndex.cells(spark, v1)
-    assert(cells.count() === 45, "stale rows survived the re-embedding rebuild")
-    assert(cells.groupBy("vec_id").count().where(col("count") > 1).count() === 0)
-    // the fresh embedding won: rebuilt state equals a cold build over
-    // the sweep alone
-    val ref = Files.createTempDirectory("graft_rebuild_ref").toString
-    AnnIndex.buildState(spark, sweep, ref)
-    val got = AnnIndex.graph(spark, v1)
-    val wantG = AnnIndex.graph(spark, ref)
-    assert(got.exceptAll(wantG).count() === 0)
-    assert(wantG.exceptAll(got).count() === 0)
+    def rows(vr: String): Seq[Row] =
+      sorted(Curation.decision(spark, vr)) ++ sorted(Curation.winnowIndex(spark, vr))
+    val chain = Files.createTempDirectory("graft_auto_curation").toString
+    def vr(b: Int) = s"$chain/v$b"
+    Curation.buildStateExactFirst(spark, slice(0), vr(0))
+    Curation.buildWinnowIndex(spark, slice(0), vr(0))
+    for (i <- 1 to 3) increment(i, vr(i - 1), vr(i))
+    val want = rows(vr(3))
+    // below the threshold: vacuum refuses (v0 is the build anchor but
+    // the kept window holds only the anchorless tip) and does NOT
+    // auto-compact — 3 versions since the v0 anchor < threshold 4
+    spark.conf.set("graft.chain.autoCompactVersions", "4")
+    spark.conf.set("graft.vacuum.orphanMinAgeMs", "0")
+    try {
+      Curation.vacuum(spark, chain, 1)
+      assert(Curation.committedVersions(spark, chain) === Seq(0L, 1L, 2L, 3L))
+      assert(!Curation.isAnchor(spark, vr(3)))
+      // one more increment crosses the threshold: the SAME vacuum call
+      // self-compacts the tip, then reclaims everything below it
+      increment(4, vr(3), vr(4))
+      val want4 = rows(vr(4))
+      Curation.vacuum(spark, chain, 1)
+      assert(Curation.committedVersions(spark, chain) === Seq(4L))
+      assert(Curation.isAnchor(spark, vr(4)))
+      assert(rows(vr(4)) === want4)
+    } finally {
+      spark.conf.unset("graft.chain.autoCompactVersions")
+      spark.conf.unset("graft.vacuum.orphanMinAgeMs")
+    }
+    assert(want.nonEmpty) // the pre-reclaim reference really had rows
   }
 
   test("incremental dedup: bucket-cap eviction by lower-id delta docs is exact") {
@@ -1118,138 +1095,6 @@ class PipelineSpec extends SparkSpec {
       r.getLong(3) == 0 && r.getLong(5) == 0))
   }
 
-  test("incremental ANN index: vN + delta state is row-identical to full rebuild") {
-    val emb = Tables.embeddings(spark, sf)
-    val vN = emb.where(col("vec_id") % 7 =!= 3)
-    val delta = emb.where(col("vec_id") % 7 === 3)
-    val rootA = Files.createTempDirectory("graft_ann_vn").toString
-    val rootB = Files.createTempDirectory("graft_ann_vn1").toString
-    val rootFull = Files.createTempDirectory("graft_ann_full").toString
-    graft.pipelines.AnnIndex.buildState(spark, vN, rootA)
-    graft.pipelines.AnnIndex.incrementState(spark, delta, rootA, rootB)
-    graft.pipelines.AnnIndex.buildState(spark, emb, rootFull)
-    val annTables = (root: String) => Seq(
-      "graph" -> graft.pipelines.AnnIndex.graph(spark, root),
-      "cells" -> graft.pipelines.AnnIndex.cells(spark, root),
-      "widths" -> spark.read.parquet(graft.pipelines.AnnIndex.widthsPath(root)))
-    for (((label, incr), (_, full)) <- annTables(rootB).zip(annTables(rootFull))) {
-      assert(incr.exceptAll(full).count() === 0, label)
-      assert(full.exceptAll(incr).count() === 0, label)
-    }
-    // non-vacuous: the delta actually added graph state
-    assert(graft.pipelines.AnnIndex.graph(spark, rootB).count() >
-      graft.pipelines.AnnIndex.graph(spark, rootA).count())
-    // lifecycle: an increment confined to ONE label touches only that
-    // label's bucket and references every other bucket in its prior
-    // (not an anchor — the uniform delta above may touch all buckets
-    // on this small corpus, so it can't pin this); compactState
-    // re-homes the references — pure I/O, rows identical — so the
-    // chain below becomes reclaimable
-    import graft.pipelines.AnnIndex
-    val more = emb.where(col("label") === 0 && col("vec_id") % 5 === 0)
-      .withColumn("vec_id", col("vec_id") + lit(100000L))
-    val rootC = Files.createTempDirectory("graft_ann_cmp").toString
-    AnnIndex.incrementState(spark, more, rootB, rootC)
-    assert(!AnnIndex.isAnchor(spark, rootC))
-    val pre = AnnIndex.graph(spark, rootC).collect()
-    AnnIndex.compactState(spark, rootC)
-    assert(AnnIndex.isAnchor(spark, rootC))
-    assert(AnnIndex.graph(spark, rootC).collect() === pre)
-  }
-
-  test("incremental ANN index: a width-tier crossing re-cells the label exactly") {
-    // label 7: 496 vN + 10 delta vectors crosses the 500-width rung
-    // (bits 0 -> 3), so ALL its vectors re-cell on increment — the
-    // case where carrying prior cells forward would silently diverge
-    // from a full rebuild. label 8 stays under the rung as control.
-    import spark.implicits._
-    def vec(id: Long): Array[Float] =
-      Array.tabulate(16)(i => (((id * 31 + i * 7) % 17) - 8).toFloat)
-    val vN = ((0L until 496L).map(i => (i, vec(i), 7)) ++
-      (1000L until 1020L).map(i => (i, vec(i), 8)))
-      .toDF("vec_id", "embedding", "label")
-    val delta = (496L until 506L).map(i => (i, vec(i), 7))
-      .toDF("vec_id", "embedding", "label")
-    val rootA = Files.createTempDirectory("graft_ann_tier_vn").toString
-    val rootB = Files.createTempDirectory("graft_ann_tier_vn1").toString
-    val rootFull = Files.createTempDirectory("graft_ann_tier_full").toString
-    graft.pipelines.AnnIndex.buildState(spark, vN, rootA)
-    graft.pipelines.AnnIndex.incrementState(spark, delta, rootA, rootB)
-    graft.pipelines.AnnIndex.buildState(spark, vN.unionByName(delta), rootFull)
-    val incr = graft.pipelines.AnnIndex.graph(spark, rootB)
-    val full = graft.pipelines.AnnIndex.graph(spark, rootFull)
-    assert(incr.exceptAll(full).count() === 0)
-    assert(full.exceptAll(incr).count() === 0)
-    // the crossing actually happened: label 7 cells are now split
-    val cellsB = graft.pipelines.AnnIndex.cells(spark, rootB)
-    assert(cellsB.where(col("label") === 7).select("cell").distinct().count() > 1)
-    assert(cellsB.where(col("label") === 8).select("cell").distinct().count() === 1)
-  }
-
-  test("incremental nav graph: vN + delta state is row-identical to full rebuild") {
-    import graft.pipelines.NavIndex
-    val emb = Tables.embeddings(spark, sf)
-    val vN = emb.where(col("vec_id") % 7 =!= 3)
-    val delta = emb.where(col("vec_id") % 7 === 3)
-    val rootA = Files.createTempDirectory("graft_nav_vn").toString
-    val rootB = Files.createTempDirectory("graft_nav_vn1").toString
-    val rootFull = Files.createTempDirectory("graft_nav_full").toString
-    NavIndex.buildState(spark, vN, rootA)
-    NavIndex.incrementState(spark, delta, rootA, rootB)
-    NavIndex.buildState(spark, emb, rootFull)
-    for (((label, incr), (_, full)) <- navTables(rootB).zip(navTables(rootFull))) {
-      assert(incr.exceptAll(full).count() === 0, label)
-      assert(full.exceptAll(incr).count() === 0, label)
-    }
-    // non-vacuous: the delta actually added graph state
-    assert(NavIndex.graph(spark, rootB).count() >
-      NavIndex.graph(spark, rootA).count())
-  }
-
-  test("a localized increment rewrites only frontier-touched buckets") {
-    // the storage contract behind the round-13 splice: a delta
-    // confined to one sign-region must leave the other region's
-    // buckets as MANIFEST REFERENCES into the prior version (zero
-    // read, zero write), in every landed table; vectors land as a
-    // pure append (all prior buckets still referenced)
-    import graft.pipelines.NavIndex
-    import graft.io.BucketedTable
-    import spark.implicits._
-    def vecA(id: Long) = Array.tabulate(64)(i => 1.0 + 0.001 * ((id * 7 + i) % 5))
-    def vecB(id: Long) = Array.tabulate(64)(i =>
-      if (i % 2 == 0) 1.0 + 0.001 * ((id * 11 + i) % 5) else -1.0 - 0.001 * ((id * 3 + i) % 5))
-    val base = ((0L until 30L).map(i => (i, vecA(i), 1L)) ++
-      (100L until 280L).map(i => (i, vecB(i), 2L)))
-      .toDF("vec_id", "embedding", "label")
-    val local = (30L until 40L).map(i => (i, vecA(i), 1L))
-      .toDF("vec_id", "embedding", "label")
-    val rootA = Files.createTempDirectory("graft_prune_vn").toString
-    val rootB = Files.createTempDirectory("graft_prune_vn1").toString
-    NavIndex.buildState(spark, base, rootA)
-    NavIndex.incrementState(spark, local, rootA, rootB)
-    for (t <- Seq(NavIndex.graphPath(rootB)) ++
-        (0 to 2).map(r => NavIndex.roundPath(rootB, r))) {
-      // manifest entries are fully-qualified URIs (file:/…), so
-      // membership is checked by containment of the unqualified root
-      val dirs = BucketedTable.parts(spark, t).values.flatten.toSeq
-      assert(dirs.exists(_.contains(rootA)),
-        s"$t carries no referenced prior buckets — the splice rewrote everything")
-      assert(dirs.exists(_.contains(rootB)),
-        s"$t wrote nothing locally — the frontier cannot be empty here")
-    }
-    val vdirs = BucketedTable.parts(spark, NavIndex.vecsPath(rootB)).values.flatten.toSeq
-    assert(vdirs.count(_.contains(rootA)) ===
-      BucketedTable.parts(spark, NavIndex.vecsPath(rootA)).values.flatten.size,
-      "vector append must keep every prior bucket referenced")
-    // and the spliced state still equals the full rebuild
-    val rootFull = Files.createTempDirectory("graft_prune_full").toString
-    NavIndex.buildState(spark, base.unionByName(local), rootFull)
-    val g1 = NavIndex.graph(spark, rootB)
-    val g2 = NavIndex.graph(spark, rootFull)
-    assert(g1.exceptAll(g2).count() === 0)
-    assert(g2.exceptAll(g1).count() === 0)
-  }
-
   test("bucketed tables refuse pruned reads and splices under a foreign bucket scheme") {
     // the pb column is a derived function of the row, not stored
     // data: pruning a table written under one key function with
@@ -1274,6 +1119,19 @@ class PipelineSpec extends SparkSpec {
       BucketedTable.writeSpliced(spark, df.limit(5), Set(0), s"$root/t", s"$root/t3", "hashB/6")
     }
     assert(e3.getMessage.contains("bucket scheme"))
+    // matching scheme: a splice lands only the touched buckets and
+    // carries every other bucket by reference; a pruned read opens
+    // only the named buckets
+    val touched = df.where(col("pb") === 0).withColumn("id", col("id") + 1000L)
+    BucketedTable.writeSpliced(spark, touched, Set(0), s"$root/t", s"$root/t5", "hashA/6")
+    val (prior, spliced) = (BucketedTable.parts(spark, s"$root/t"),
+      BucketedTable.parts(spark, s"$root/t5"))
+    assert(spliced - 0 === prior - 0)
+    assert(spliced(0).forall(_.contains(s"$root/t5/")))
+    assert(BucketedTable.readParts(spark, s"$root/t5", "id BIGINT", Set(0), "hashA/6")
+      .as[Long].collect().toSet === Set(1000L, 1064L))
+    assert(BucketedTable.read(spark, s"$root/t5", "id BIGINT").as[Long].collect().toSet ===
+      ((0L until 100L).filter(_ % 64 != 0) ++ Seq(1000L, 1064L)).toSet)
     // matching scheme passes — and compact on a multi-dir appended
     // chain returns every bucket to one directory with rows intact
     BucketedTable.writeAppended(spark,
@@ -1308,163 +1166,6 @@ class PipelineSpec extends SparkSpec {
       "re-compacting an already-compacted table must be a no-op")
     assert(after.values.forall(_.size === 1))
     assert(BucketedTable.read(spark, s"$root/t4", "id BIGINT").count() === 152)
-  }
-
-  test("incremental nav graph: retire splices row-identical to a reduced rebuild") {
-    import graft.pipelines.NavIndex
-    val emb = Tables.embeddings(spark, sf)
-    val del = emb.where(col("vec_id") % 17 === 3).select("vec_id")
-    val rootA = Files.createTempDirectory("graft_navret_vn").toString
-    val rootB = Files.createTempDirectory("graft_navret_vn1").toString
-    val rootFull = Files.createTempDirectory("graft_navret_full").toString
-    NavIndex.buildState(spark, emb, rootA)
-    NavIndex.retireState(spark, del, rootA, rootB)
-    NavIndex.buildState(spark, emb.join(del, Seq("vec_id"), "left_anti"), rootFull)
-    for (((label, incr), (_, full)) <- navTables(rootB).zip(navTables(rootFull))) {
-      assert(incr.exceptAll(full).count() === 0, label)
-      assert(full.exceptAll(incr).count() === 0, label)
-    }
-    // non-vacuous: vectors were actually retired, and no ghost node
-    // or dangling edge survives anywhere in the landed state
-    val delIds = del.collect().map(_.getLong(0)).toSet
-    assert(delIds.nonEmpty)
-    val g = NavIndex.graph(spark, rootB)
-    assert(g.collect().forall(r =>
-      !delIds.contains(r.getAs[Long]("node")) && !delIds.contains(r.getAs[Long]("nbr_id"))))
-    assert(NavIndex.readVecs(spark, rootB).count() ===
-      emb.count() - delIds.size)
-  }
-
-  test("curation drop decisions retire from the nav index exactly") {
-    import graft.pipelines.{Curation, NavIndex}
-    val emb = Tables.embeddings(spark, sf)
-    val curRoot = Files.createTempDirectory("graft_curret_cur").toString
-    Curation.buildClusters(spark, sf, curRoot)
-    val dropped = Curation.decision(spark, curRoot)
-      .where(!col("keep")).select(col("doc_id").as("vec_id"))
-    // non-vacuous only if the corpus has near-dup drops WITH embeddings
-    val droppedWithEmb = dropped.join(emb, Seq("vec_id"), "left_semi").count()
-    assert(droppedWithEmb > 0, "corpus has no dropped docs with embeddings")
-    val idxA = Files.createTempDirectory("graft_curret_idx").toString
-    val idxB = Files.createTempDirectory("graft_curret_idx2").toString
-    val idxKept = Files.createTempDirectory("graft_curret_full").toString
-    NavIndex.buildState(spark, emb, idxA)
-    Curation.retireDropped(spark, curRoot, idxA, idxB)
-    NavIndex.buildState(spark, emb.join(dropped, Seq("vec_id"), "left_anti"), idxKept)
-    val ret = NavIndex.graph(spark, idxB)
-    val full = NavIndex.graph(spark, idxKept)
-    assert(ret.exceptAll(full).count() === 0)
-    assert(full.exceptAll(ret).count() === 0)
-    assert(NavIndex.readVecs(spark, idxB).count() ===
-      emb.count() - droppedWithEmb)
-  }
-
-  test("incremental nav graph: a bucket-cap flip re-pairs the bucket exactly") {
-    // 60 vN clones share every band bucket (identical sign pattern);
-    // 10 delta clones push those buckets 60 -> 70, past the 64 cap, so
-    // a full rebuild switches them from all-pairs to ANCHOR pairing —
-    // the discontinuous case where carrying prior seed edges forward
-    // would silently diverge. 30 varied-sign background vectors are
-    // the control: their buckets see no delta and must splice verbatim.
-    import spark.implicits._
-    def clone64(id: Long): Array[Double] =
-      Array.tabulate(64)(i => 1.0 + 0.001 * ((id * 13 + i) % 7))
-    def varied(id: Long): Array[Double] =
-      Array.tabulate(64)(i => if (((id * 31 + i * 17) % 11) < 5) -1.0 - 0.01 * i else 1.0 + 0.01 * i)
-    val vN = ((0L until 60L).map(i => (i, clone64(i), 1L)) ++
-      (100L until 130L).map(i => (i, varied(i), 2L)))
-      .toDF("vec_id", "embedding", "label")
-    val delta = (60L until 70L).map(i => (i, clone64(i), 1L))
-      .toDF("vec_id", "embedding", "label")
-    val rootA = Files.createTempDirectory("graft_nav_cap_vn").toString
-    val rootB = Files.createTempDirectory("graft_nav_cap_vn1").toString
-    val rootFull = Files.createTempDirectory("graft_nav_cap_full").toString
-    import graft.pipelines.NavIndex
-    NavIndex.buildState(spark, vN, rootA)
-    NavIndex.incrementState(spark, delta, rootA, rootB)
-    NavIndex.buildState(spark, vN.unionByName(delta), rootFull)
-    val incr = NavIndex.graph(spark, rootB)
-    val full = NavIndex.graph(spark, rootFull)
-    assert(incr.exceptAll(full).count() === 0)
-    assert(full.exceptAll(incr).count() === 0)
-    // the flip actually happened: under the cap every clone saw every
-    // clone as a seed candidate (distinct round-0 targets ≈ all 69
-    // others); over it, out-edges can point only at the bucket's
-    // ~17 anchors — far fewer distinct targets than members
-    assert(NavIndex.graph(spark, rootA)
-      .where(col("node") < 100).count() > 0)
-    val e0 = NavIndex.round(spark, rootB, 0)
-      .where(col("node") < 100)
-    assert(e0.count() > 0)
-    val targets = e0.select("nbr_id").distinct().count()
-    assert(targets < 40, s"expected anchor-limited targets, got $targets")
-    // and the background subgraph survived untouched
-    assert(incr.where(col("node") >= 100).count() ===
-      NavIndex.graph(spark, rootA).where(col("node") >= 100).count())
-    // ROUND TRIP — retiring the 10 delta clones flips the bucket BACK
-    // under the cap (anchor pairing -> all-pairs, the symmetric
-    // discontinuity), and the spliced state must equal the original
-    // vN state at every landed table
-    val rootC = Files.createTempDirectory("graft_nav_cap_vn2").toString
-    NavIndex.retireState(spark, delta.select("vec_id"), rootB, rootC)
-    for (((label, back), (_, orig)) <- navTables(rootC).zip(navTables(rootA))) {
-      assert(back.exceptAll(orig).count() === 0, label)
-      assert(orig.exceptAll(back).count() === 0, label)
-    }
-  }
-
-  test("incremental nav graph: grow-only over-cap growth splices; a quantized-width crossing re-ranks") {
-    import spark.implicits._
-    import graft.pipelines.NavIndex
-    def clone64(id: Long): Array[Double] =
-      Array.tabulate(64)(i => 1.0 + 0.001 * ((id * 13 + i) % 7))
-    def varied(id: Long): Array[Double] =
-      Array.tabulate(64)(i => if (((id * 31 + i * 17) % 11) < 5) -1.0 - 0.01 * i else 1.0 + 0.01 * i)
-    def parity(rootB: String, rootFull: String): Unit =
-      for (((label, incr), (_, full)) <- navTables(rootB).zip(navTables(rootFull)))
-        if (label != "vecs") {
-          assert(incr.exceptAll(full).count() === 0, label)
-          assert(full.exceptAll(incr).count() === 0, label)
-        }
-    // case 1 — GROW-ONLY: 70 clones are already over the cap (anchor
-    // pairing at quantized ceiling 128); 10 HIGHER-id delta clones
-    // grow the bucket to 80 — same cap side, same ceiling, same min —
-    // so existing members take the grow-splice path (prior top-16 ∪
-    // delta pairs), and the spliced state must equal the full rebuild
-    val vN1 = ((0L until 70L).map(i => (i, clone64(i), 1L)) ++
-      (1000L until 1030L).map(i => (i, varied(i), 2L)))
-      .toDF("vec_id", "embedding", "label")
-    val d1 = (70L until 80L).map(i => (i, clone64(i), 1L))
-      .toDF("vec_id", "embedding", "label")
-    val ra1 = Files.createTempDirectory("graft_grow_vn").toString
-    val rb1 = Files.createTempDirectory("graft_grow_vn1").toString
-    val rf1 = Files.createTempDirectory("graft_grow_full").toString
-    NavIndex.buildState(spark, vN1, ra1)
-    NavIndex.incrementState(spark, d1, ra1, rb1)
-    NavIndex.buildState(spark, vN1.unionByName(d1), rf1)
-    parity(rb1, rf1)
-    // non-vacuous: the clique stayed anchor-limited (quantized rate
-    // 16/128 over 80 members + the min-id anchor — far fewer distinct
-    // round-0 targets than members)
-    val targets0 = NavIndex.round(spark, rb1, 0)
-      .where(col("node") < 100).select("nbr_id").distinct().count()
-    assert(targets0 < 40, s"expected anchor-limited targets, got $targets0")
-    // case 2 — QUANTIZED-WIDTH FLIP: 120 clones (ceiling 128) + 20
-    // delta clones -> 140 crosses to ceiling 256; every member's
-    // anchor threshold halves, so the bucket must full-re-rank — and
-    // still land bit-identical to the rebuild
-    val vN2 = ((0L until 120L).map(i => (i, clone64(i), 1L)) ++
-      (1000L until 1030L).map(i => (i, varied(i), 2L)))
-      .toDF("vec_id", "embedding", "label")
-    val d2 = (120L until 140L).map(i => (i, clone64(i), 1L))
-      .toDF("vec_id", "embedding", "label")
-    val ra2 = Files.createTempDirectory("graft_qwf_vn").toString
-    val rb2 = Files.createTempDirectory("graft_qwf_vn1").toString
-    val rf2 = Files.createTempDirectory("graft_qwf_full").toString
-    NavIndex.buildState(spark, vN2, ra2)
-    NavIndex.incrementState(spark, d2, ra2, rb2)
-    NavIndex.buildState(spark, vN2.unionByName(d2), rf2)
-    parity(rb2, rf2)
   }
 
   test("csv interchange round-trips with declared schema") {

@@ -329,7 +329,7 @@ class PlanAuditSpec extends SparkSpec {
     val cand = v.select(col("vec_id").as("node"))
       .crossJoin(v.select(col("vec_id").as("nbr_id")).limit(4))
       .where(col("node") =!= col("nbr_id"))
-    val plan = graft.ops.Similarity.navTopK(spark, v, cand)
+    val plan = graft.ops.Similarity.navTopK(spark, v, cand, v.count())
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2,
       "navTopK must broadcast both vector attaches under the tier")

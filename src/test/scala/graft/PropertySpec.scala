@@ -26,10 +26,10 @@ class PropertySpec extends AnyFunSuite {
     samples(g, n).foreach(body)
 
   test("grow-splice lemma: top-k(S ∪ A) = top-k(top-k(S) ∪ A) on random vector sets") {
-    // the identity NavIndex.incrementState's seed round stands on: a
-    // node whose candidate set only GREW may merge its prior top-16
-    // with the additions instead of re-ranking the full set. Random
-    // vectors, random candidate pairs, random growth split.
+    // the identity an incremental seed round over Similarity.navTopK
+    // stands on: a node whose candidate set only GREW may merge its
+    // prior top-16 with the additions instead of re-ranking the full
+    // set. Random vectors, random candidate pairs, random growth split.
     import spark.implicits._
     val gen = for {
       n <- Gen.choose(20, 40)
@@ -49,12 +49,12 @@ class PropertySpec extends AnyFunSuite {
       val grown = all.filter(_ => rnd.nextDouble() < 0.3) // A: the additions
       val base = all.diff(grown)                          // S: the prior set
       val full = graft.ops.Similarity.navTopK(spark, v,
-        all.toDF("node", "nbr_id"))
+        all.toDF("node", "nbr_id"), n)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val priorTop = graft.ops.Similarity.navTopK(spark, v,
-        base.toDF("node", "nbr_id"))
+        base.toDF("node", "nbr_id"), n)
       val spliced = graft.ops.Similarity.navTopK(spark, v,
-        priorTop.unionByName(grown.toDF("node", "nbr_id")))
+        priorTop.unionByName(grown.toDF("node", "nbr_id")), n)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(spliced === full,
         s"grow-splice diverged: +${(spliced -- full).size} -${(full -- spliced).size} (n=$n dim=$dim seed=$seed)")

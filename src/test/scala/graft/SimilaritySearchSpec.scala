@@ -70,18 +70,6 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(recall >= 0.8, s"sharded recall $recall below the 0.8 floor")
   }
 
-  test("artifact and pipeline nav-graph builds are edge-identical") {
-    // two IO paths over the same construction (ArtifactCache query
-    // path vs NavIndex release state) must not drift
-    val art = Similarity.navGraphShared(spark, sf).select("node", "nbr_id")
-    val root = java.nio.file.Files.createTempDirectory("graft_nav_parity").toString
-    graft.pipelines.NavIndex.buildState(spark, Tables.embeddings(spark, sf), root)
-    val pipe = graft.pipelines.NavIndex.graph(spark, root).select("node", "nbr_id")
-    assert(art.exceptAll(pipe).count() === 0)
-    assert(pipe.exceptAll(art).count() === 0)
-    assert(art.count() > 0)
-  }
-
   test("pq-accelerated search beats the recall floor (exact rerank over ADC walk)") {
     val exact = Similarity.bruteForceTopK(spark, sf)
       .select("vec_id", "nbr_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -234,22 +222,10 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(navHopsFor(200000L) === 10)
     assert(navBeamFor(20000L) === 16) // spread-entry regime: measured
     assert(navBeamFor(200000L) === 16) // 30/30 at ×10/×100 at width 16
-  }
-
-  test("incremental nav maintenance refuses a seed-band width boundary crossing") {
-    import graft.pipelines.NavIndex
-    val emb = Tables.embeddings(spark, sf) // 500 rows
-    def shifted(k: Int) = emb.withColumn("vec_id", col("vec_id") + lit(k * 100000L))
-    // prior corpus 2000 vectors (bits = 8); +500 crosses to 2500 (bits = 9)
-    val prior = (0 until 4).map(shifted).reduce(_.unionByName(_))
-    val root = java.nio.file.Files.createTempDirectory("graft_navguard").toString
-    NavIndex.landVecs(spark, prior, s"$root/vn")
-    val e = intercept[IllegalArgumentException] {
-      NavIndex.incrementState(spark, shifted(4), s"$root/vn", s"$root/vn1")
-    }
-    assert(e.getMessage.contains("width boundary"))
-    assert(ops.Similarity.navBitsFor(2000) === 8)
-    assert(ops.Similarity.navBitsFor(2500) === 9)
+    // the seed-band width: 8 bits through 2^11 vectors, then wider
+    import ops.Similarity.navBitsFor
+    assert(navBitsFor(2000) === 8)
+    assert(navBitsFor(2500) === 9)
   }
 
   test("filtered PQ walk: answers eligible, recall floor vs filtered brute force") {
